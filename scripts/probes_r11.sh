@@ -6,12 +6,11 @@
 #     r11 binary — the registered adaptive shortlist rides through the
 #     operator path (Sim.adcShortlist), closing VERDICT r10 #1/#5 and
 #     the ADVICE VEC5M_SL gap; plus a fixed-50 control at 5M.
-#  2. PREFIX_AB re-capture at low load (VERDICT r10 #8).
-#  3. st_sessions 100x adjudication: isolated min-of-3, in-memory vs
+#  2. st_sessions 100x adjudication: isolated min-of-3, in-memory vs
 #     RocksDB (VERDICT r10 #2).
-#  4. t_bpe family at 10x-fresh vs 100x-fresh — matched-regime exponent
+#  3. t_bpe family at 10x-fresh vs 100x-fresh — matched-regime exponent
 #     for the 1.25 adjudication (VERDICT r10 #3).
-#  5. StateProbe RDB artifacts with the in-artifact denominator
+#  4. StateProbe RDB artifacts with the in-artifact denominator
 #     (VERDICT r10 #7).
 # Usage: scripts/probes_r11.sh [outDir]
 set -euo pipefail
@@ -69,22 +68,15 @@ ann /tmp/vec2m   48g ANNPROBE_VEC2M_r11.json
 ann /tmp/vec5m   48g ANNPROBE_VEC5M_r11.json
 ann /tmp/vec5m   48g ANNPROBE_VEC5M_SL50_r11.json SPARK_GRAFT_ANN_SHORTLIST=50
 
-# 2. prefix-containment A/B at low load
-wait_idle
-echo "=== prefix_ab ==="
-SPARK_DRIVER_MEM=24g scripts/run_main.sh graft.tools.PrefixAb \
-  /tmp/sf1 "$OUT/PREFIX_AB_SF1_r11.json" > /tmp/prefix_ab_r11.log 2>&1
-echo "--- prefix_ab: $(head -c 200 "$OUT/PREFIX_AB_SF1_r11.json")"
-
-# 3. st_sessions 100x adjudication
+# 2. st_sessions 100x adjudication
 bench BENCH_SF10_SESSIONS_MEM_ISO_r11 /tmp/sf10 st_sessions 48g 3
 bench BENCH_SF10_SESSIONS_RDB_ISO_r11 /tmp/sf10 st_sessions 48g 3 SPARK_GRAFT_ROCKSDB=1
 
-# 4. t_bpe matched-regime exponents (fresh 10x vs fresh 100x)
+# 3. t_bpe matched-regime exponents (fresh 10x vs fresh 100x)
 bench BENCH_SF1F_BPE_r11  /tmp/sf1_fresh t_bpe_tokens,t_bpe_merges,t_bpe_encode 24g 3
 bench BENCH_SF10_BPE_r11  /tmp/sf10      t_bpe_tokens,t_bpe_merges,t_bpe_encode 48g 3
 
-# 5. StateProbe RDB with in-artifact denominator
+# 4. StateProbe RDB with in-artifact denominator
 wait_idle
 echo "=== stateprobe sf1 rdb ==="
 SPARK_GRAFT_ROCKSDB=1 SPARK_DRIVER_MEM=24g scripts/run_main.sh \
@@ -96,6 +88,6 @@ SPARK_GRAFT_ROCKSDB=1 SPARK_DRIVER_MEM=48g scripts/run_main.sh \
   graft.tools.StateProbe /tmp/ev300 "$OUT/STATEPROBE_EV300_RDB_r11.json" \
   > /tmp/stateprobe_ev300_rdb.log 2>&1
 
-# 6. The decade-up ANN point (VERDICT r10 #5) — longest capture, last.
+# 5. The decade-up ANN point (VERDICT r10 #5) — longest capture, last.
 ann /tmp/vec20m  48g ANNPROBE_VEC20M_r11.json
 echo ALL_PROBES_DONE

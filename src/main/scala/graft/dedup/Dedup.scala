@@ -35,32 +35,31 @@ object Dedup {
   def shingleTable(docs: DataFrame): DataFrame =
     shingleSets(docs).select(col("doc_id"), explode(col("shs")).as("shingle"))
 
-  // Bucket pair fan-out is the native generator pair
-  // (gfunctions.orderedPairsRows / orderedIdPairsRows →
-  // functions.OrderedPairsGen): the lossless size-filter math and the
-  // laziness contract live on the expression's Scaladoc.
+  // Bucket pair fan-out is the native generator
+  // (gfunctions.orderedPairsRows → functions.OrderedPairsGen): the
+  // lossless size-filter math and the laziness contract live on the
+  // expression's Scaladoc.
 
-  /** Pair-mass budget per corpus document for [[adaptiveDfCap]]. Sized
-    * so the driver corpora never tighten (sf0.1 carries ~253
+  /** Pair-mass budget per corpus document for [[adaptiveDfCapFromDf]].
+    * Sized so the sf test corpora never tighten (sf0.1 carries ~253
     * pairs/doc at the full cap — 4× headroom) while a replica-heavy
     * corpus (duplication ∝ factor ⇒ pair mass ∝ factor²) does.
     */
   private[graft] val PairMassPerDoc = 1000L
 
-  /** Duplication-adaptive document-frequency cap for the shingle
-    * inverted index, driven by the same pair-mass statistic
-    * d_dup_profile reports: every df-f shingle fans out f·(f−1)/2
-    * pairs, so the predicted pair-shuffle volume of a cap c is
-    * Σ_{2 ≤ df ≤ c} mass(df). Picks the LARGEST cap ≤ maxCap whose
-    * predicted mass stays within PairMassPerDoc × nDocs.
+  /** Duplication-adaptive document-frequency cap for a blocking index,
+    * driven by the same pair-mass statistic d_dup_profile reports:
+    * every df-f key fans out f·(f−1)/2 pairs, so the predicted
+    * pair-shuffle volume of a cap c is Σ_{2 ≤ df ≤ c} mass(df). Picks
+    * the LARGEST cap ≤ maxCap whose predicted mass stays within
+    * PairMassPerDoc × nDocs.
     *
     * On low-duplication corpora the budget is slack and the cap is
     * maxCap — bit-identical output to the fixed cap (the DuckDB
-    * oracles keep their literal 1000). On replica-heavy corpora
-    * (the r5 100× probe: df ∝ replica factor everywhere, pair mass ∝
-    * factor², d_containment exhausting local disk) the cap tightens
-    * so the pair stage stays ∝ corpus size — the recall knob the
-    * fixed cap already was, now self-tuning. The histogram collect is
+    * oracles keep their literal 1000). On replica-heavy corpora (df ∝
+    * replica factor everywhere, pair mass ∝ factor²) the cap tightens
+    * so the pair stage stays ∝ corpus size — the recall knob the fixed
+    * cap already was, now self-tuning. The histogram collect is
     * bounded: ≤ maxCap−1 (df, mass) rows.
     */
   private[graft] def adaptiveDfCapFromDf(dfFreq: DataFrame, nDocs: Long,
@@ -105,104 +104,34 @@ object Dedup {
     floored
   }
 
-  /** One-collect variant for blocking keys where each row is one
-    * DOCUMENT (prefix buckets — unlike shingle indexes, where a doc
-    * spans many keys): derives the pair-mass histogram AND the
-    * participating-doc count from a single bounded aggregation over
-    * the key-frequency frame, so the cap pre-pass costs one job and
-    * one ≤ maxCap+1-row collect — no checkpoint, no extra corpus
-    * scan for the count. The budget base is Σ df over ALL buckets —
-    * including df=1 buckets (which can never pair) and the collapsed
-    * over-cap bucket (excluded from pairing at any cap) — i.e. total
-    * doc-key participation in the blocking, NOT just pair-capable
-    * docs. That mirrors adaptiveDfCapFromDf's per-corpus-doc budget
-    * (each doc contributes exactly one prefix key here), so the two
-    * cap functions resolve identically on the same corpus; excluding
-    * the non-pairing buckets would silently tighten the cap relative
-    * to the fixed-cap oracle contract.
-    */
-  private[graft] def adaptiveDfCapOnePass(dfFreq: DataFrame,
-                                          maxCap: Long = 1000L): Long = {
-    // df values above maxCap collapse into one bucket: those keys are
-    // excluded from pairing at ANY cap, so only their doc count
-    // matters — the collect stays ≤ maxCap+1 rows on any corpus.
-    val hist = dfFreq
-      .groupBy(least(col("df"), lit(maxCap + 1)).as("dfb"))
-      .agg(sum(col("df")).cast("long").as("docs"),
-        sum(((col("df") * (col("df") - 1)) / 2).cast("long")).as("mass"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val nDocs = hist.map(_._2).sum
-    val budget = PairMassPerDoc * math.max(nDocs, 1L)
-    var cum = 0L
-    var cap = maxCap
-    var busted = false
-    for ((dfv, _, mass) <- hist if !busted && dfv >= 2 && dfv <= maxCap) {
-      if (cum + mass <= budget) cum += mass
-      else { cap = dfv - 1; busted = true }
-    }
-    val floored = math.max(cap, 2L)
-    if (floored < maxCap) {
-      log.warn(s"adaptive df cap tightened to $floored (maxCap $maxCap, " +
-        s"participating docs $nDocs): predicted pair mass busts the " +
-        s"$budget-pair budget; keys with frequency > $floored are excluded from pairing")
-      if (sys.props.get("graft.assertFixedCap").contains("true"))
-        throw new IllegalStateException(
-          s"adaptive df cap tightened to $floored < maxCap $maxCap during an " +
-            "oracle-gated run; the DuckDB oracle assumes the fixed cap — " +
-            "regenerate the oracle or run this corpus without the assertion")
-    }
-    floored
-  }
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.dedup")
 
-  /** [[adaptiveDfCapFromDf]] over raw index entries (one row per
-    * (doc, shingle)).
-    */
-  private[graft] def adaptiveDfCap(entries: DataFrame, nDocs: Long,
-                                   maxCap: Long = 1000L): Long =
-    adaptiveDfCapFromDf(
-      entries.groupBy("shingle").agg(count(lit(1)).as("df")), nDocs, maxCap)
-
-  /** Keys above this count fall back from the broadcast anti-join to
-    * the under-cap semi-join in [[cappedRows]] (the anti list must fit
-    * the session's broadcast budget; ~25 B/shingle ⇒ ≤ ~25 MB).
-    */
-  private[graft] val AntiBroadcastMaxKeys = 1000000L
-
-  /** The FUSED capped-index front half of the shingle inverted-index
-    * operators: ONE corpus tokenize and ONE exchange build the bucket
+  /** The capped bucket index every blocking family builds on — shingle
+    * inverted index (`shingle`), LSH band buckets (`band, bsig`) and
+    * prefix buckets (`p50`): ONE exchange builds the sorted bucket
     * arrays AND the df statistic together.
-    *
-    * The previous shape ran the corpus twice — a frequency pass
-    * (tokenize #1 → groupBy(shingle).count, checkpointed) to derive
-    * the adaptive cap and the over-cap key head, then a broadcast
-    * anti-join + groupBy(shingle).collect_list (tokenize #2) to build
-    * the buckets. [[graft.functions.CappedSortedCollect]] collapses
-    * both: the aggregate collects up to maxCap+1 (doc_id, n) entries
-    * per shingle, so `size(ids)` IS the exact df for every bucket
-    * that can matter (df ≤ maxCap never truncates) and the over-cap
-    * head self-identifies as size = maxCap+1 — no second corpus pass,
-    * no freq table, no anti-join, and partial-agg memory per hot key
-    * is cap-bounded by construction (the property the filter-first
-    * anti-join existed to provide). The checkpointed bucket frame is
-    * entries-sized but STRING-FREE (the shingle key is dropped; r17's
-    * measured lesson: persists pay for narrow derived frames only),
-    * and it feeds both the cap histogram and the pair fan-out.
-    * Returns (cap, df-filtered sorted bucket arrays).
+    * [[graft.functions.CappedSortedCollect]] collects up to maxCap+1
+    * (doc_id, n) entries per key, so `size(ids)` IS the exact df of
+    * every bucket that can matter (df ≤ maxCap never truncates) and
+    * the over-cap head self-identifies as size = maxCap+1 — no
+    * frequency pass, no anti-join, and partial-agg memory per hot key
+    * is cap-bounded by construction. Entries without a set size (LSH,
+    * prefix) carry n = 0 and fan out with the generator's size filter
+    * off. The checkpointed bucket frame is STRING-FREE (the key
+    * columns are dropped; persists pay for narrow derived frames only)
+    * and feeds both the cap histogram and the pair fan-out. Returns
+    * the df-filtered sorted bucket arrays.
     */
-  private def cappedBuckets(entries: DataFrame, nDocs: => Long,
+  private def cappedBuckets(entries: DataFrame, keys: Seq[String], nDocs: => Long,
                             maxCap: Long = 1000L,
-                            adaptive: Boolean = true): (Long, DataFrame) = {
+                            adaptive: Boolean = true): DataFrame = {
     val bufCap = (math.min(maxCap, Int.MaxValue - 2L) + 1L).toInt
-    val buckets = graft.Caching.releaseAfter(cappedBucketsPlan(entries, bufCap))
+    val buckets = graft.Caching.releaseAfter(cappedBucketsPlan(entries, keys, bufCap))
     val cap = if (adaptive)
       adaptiveDfCapFromDf(
         buckets.select(size(col("ids")).cast("long").as("df")), nDocs, maxCap)
     else maxCap
-    (cap, buckets.filter(size(col("ids")).between(2, cap)))
+    buckets.filter(size(col("ids")).between(2, cap))
   }
 
   /** The lazy bucket-build plan behind [[cappedBuckets]] — split out so
@@ -210,52 +139,11 @@ object Dedup {
     * second pass) stays assertable: cappedBuckets checkpoints, and a
     * checkpoint's plan is an opaque RDD scan.
     */
-  private[graft] def cappedBucketsPlan(entries: DataFrame, bufCap: Int): DataFrame =
-    entries.groupBy("shingle")
+  private[graft] def cappedBucketsPlan(entries: DataFrame, keys: Seq[String],
+                                       bufCap: Int): DataFrame =
+    entries.groupBy(keys.map(col): _*)
       .agg(cappedSortedCollect(col("doc_id"), col("n"), bufCap).as("ids"))
       .select("ids")
-
-  /** [[cappedShingles]] generalized to any blocking key (LSH band
-    * buckets, prefix buckets): materialize key frequencies once,
-    * derive the budgeted cap over the bucket-size histogram, and drop
-    * the over-cap keys from `rows` with the CHEAPEST correct plan.
-    *
-    * The over-cap key set is the zipfian HEAD — bounded by Σdf/cap
-    * keys, in practice a handful of stopword-grams (r18 measure: ~20
-    * of 2.7M distinct shingles at the 100× corpus) — so the default
-    * strategy is a broadcast ANTI-join against it: the corpus-scale
-    * entry table is never sort-merged for a filter that drops almost
-    * nothing, and the bucket groupBy downstream performs the single
-    * exchange (measured 62.3 → 37.4 s on isolated sf10 d_containment).
-    * df=1 keys pass through on this path: a size-1 bucket generates no
-    * pairs and a SHARED key always has df ≥ 2, so the pair multiset —
-    * and every count derived from it — is unchanged (the old under-cap
-    * semi-join's df ≥ 2 clause was an optimization, not a semantic).
-    * When the over-cap head outgrows the broadcast budget
-    * (pathological duplication) the semi-join fallback bounds memory
-    * by construction. With `maxCap = Long.MaxValue` and an untightened
-    * cap there is nothing to drop and the filter disappears from the
-    * plan entirely (the d_minhash_lsh oracle enumerates every bucket).
-    * Either path keeps every bucket array cap-bounded.
-    */
-  private def cappedRows(rows: DataFrame, keyCols: Seq[String], nDocs: => Long,
-                         maxCap: Long = 1000L,
-                         adaptive: Boolean = true): (Long, DataFrame) = {
-    val freq = graft.Caching.releaseAfter(
-      rows.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("df")))
-    val cap = if (adaptive) adaptiveDfCapFromDf(freq, nDocs, maxCap) else maxCap
-    val filtered = if (cap == Long.MaxValue) rows
-    else {
-      val over = freq.filter(col("df") > cap).select(keyCols.map(col): _*)
-      val nOver = over.count()
-      if (nOver <= AntiBroadcastMaxKeys)
-        rows.join(broadcast(over), keyCols, "left_anti")
-      else
-        rows.join(freq.filter(col("df").between(2, cap)).select(keyCols.map(col): _*),
-          keyCols)
-    }
-    (cap, filtered)
-  }
 
   private val ShSql =
     s"""sh AS (SELECT DISTINCT doc_id,
@@ -365,9 +253,9 @@ object Dedup {
         ngramJaccardPairsPlan(docs, maxDf, threshold, adaptive))
 
   /** The LAZY pair plan behind [[ngramJaccardPairs]] — split out so
-    * the plan-shape invariants (native generator fan-out, bucket build
-    * after the df-filter join) stay assertable: the public entry
-    * checkpoints, and a checkpoint's plan is an opaque RDD scan.
+    * the plan-shape invariant (native generator fan-out) stays
+    * assertable: the public entry checkpoints, and a checkpoint's plan
+    * is an opaque RDD scan.
     */
   private[graft] def ngramJaccardPairsPlan(docs: DataFrame, maxDf: Long = 1000,
                         threshold: Double = 0.5,
@@ -377,7 +265,7 @@ object Dedup {
       // fused bucket build: one tokenize, one exchange; every bucket
       // array is cap-bounded INSIDE the aggregate and over-cap keys
       // drop on the df filter (see cappedBuckets)
-      val (_, buckets) = cappedBuckets(entries, docs.count(), maxDf, adaptive)
+      val buckets = cappedBuckets(entries, Seq("shingle"), docs.count(), maxDf, adaptive)
       buckets
         .select(orderedPairsRows(col("ids"), threshold - 1e-4))
         .groupBy("doc_a", "doc_b", "na", "nb")
@@ -465,31 +353,18 @@ object Dedup {
         array_min(transform(col("hs"), h => (lit(a) * h + lit(b)) % P)).as(s"mh$i")
       }
       val sig = ds.select(col("doc_id") +: mhCols: _*)
-      // bands feeds the cap's frequency pass AND the bucket-build join;
-      // persisted (4 short rows per doc), the 16 × |shingles| signature
-      // permutation folds run ONCE instead of once per consumer (guide
-      // §1.2) — the cached `ds` arrays alone don't help, the fold is
-      // the expensive map-side work above them.
-      val bands = sig.select(col("doc_id"),
+      // n = 0: band buckets carry no set size, so the fan-out runs
+      // with the size filter off. The cap stays live (a replica-heavy
+      // band bucket fans out quadratically in duplication) but maxCap
+      // is unbounded, so low-duplication corpora keep the oracle's
+      // every-bucket semantics exactly.
+      val bands = sig.select(col("doc_id"), lit(0).as("n"),
         posexplode(array((0 until 4).map(b => concat_ws(",",
           (0 until 4).map(k => col(s"mh${b * 4 + k}").cast("string")): _*)): _*))
           .as(Seq("band", "bsig")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // band buckets were previously UNCAPPED (filter ≥ 2 only): a
-      // replica-heavy bucket is one corpus-sized collect_list array
-      // whose map-side fan-out is quadratic in duplication. Same
-      // budgeted-cap + filter-first treatment as the shingle index;
-      // maxCap = unbounded so low-duplication corpora keep the
-      // oracle's every-bucket semantics exactly — and, untightened,
-      // the cap filter vanishes from the plan (cappedRows), so the
-      // bucket build is the groupBy alone (a size-1 band bucket
-      // generates no pairs; dropping it bought nothing but a join).
-      val (_, fb) = cappedRows(bands, Seq("band", "bsig"),
-        docs.count(), maxCap = Long.MaxValue)
-      val cand = fb
-        .groupBy("band", "bsig")
-        .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-        .select(orderedIdPairsRows(col("ids")))
+      val cand = cappedBuckets(bands, Seq("band", "bsig"), docs.count(), maxCap = Long.MaxValue)
+        .select(orderedPairsRows(col("ids")))
+        .select("doc_a", "doc_b")
         .distinct()
       val out = cand
         .join(ds.select(col("doc_id").as("doc_a"), col("shs").as("sa")), Seq("doc_a"))
@@ -499,7 +374,7 @@ object Dedup {
             (size(col("sa")) + size(col("sb")) -
               size(array_intersect(col("sa"), col("sb")))), 4).as("jaccard"))
         .filter(col("jaccard") >= threshold)
-      graft.Caching.releaseAfter(out, ds, bands)
+      graft.Caching.releaseAfter(out, ds)
   }
 
   /** The full per-doc simhash pairwise oracle — shared verbatim by
@@ -956,54 +831,39 @@ object Dedup {
       WHERE starts_with(CASE WHEN length(sa) <= length(sb) THEN sb ELSE sa END,
                         CASE WHEN length(sa) <= length(sb) THEN sa ELSE sb END)
       ORDER BY doc_short, doc_long"""),
-    (s, d) => prefixPairs(s, d),
+    (s, d) => prefixPairs(Tables.documents(s, d)).orderBy("doc_short", "doc_long"),
   )
 
-  /** d_prefix_containment's plan, with the cap injectable so the A/B
-    * adjudication tool (tools/PrefixAb) can run the fixed-cap and
-    * adaptive variants interleaved in ONE JVM — the only measurement
-    * that survives this host's burst noise on a sub-2 s query.
-    * `capOverride = None` (the registered query) runs the adaptive
-    * pre-pass; `Some(c)` skips it and feeds `c` as the literal.
+  /** Truncation-duplicate pairs by prefix containment for any
+    * (doc_id, text) frame.
     */
-  private[graft] def prefixPairs(s: SparkSession, d: String,
-                                 capOverride: Option[Long] = None): DataFrame = {
-      val norm = Tables.documents(s, d)
-        .select(col("doc_id"), Text.normText(col("text")).as("s"))
-      val keyed = norm
-        .filter(length(col("s")) >= 50)
-        .select(col("doc_id"), substring(col("s"), 1, 50).as("p50"))
-      // Budgeted cap (≤ the oracle's fixed 1000; identical on
-      // low-duplication data): truncation-replica corpora share the
-      // p50 prefix across every replica, so an uncapped bucket array
-      // is quadratic in duplication. The cap pre-pass is ONE cheap
-      // groupBy-count job with a bounded collect that yields both the
-      // histogram and the participating-doc budget; the main plan then
-      // stays the r5 fully-fused single job (aggregate → size filter
-      // with the cap as a LITERAL → pair fan-out → text joins). The r7
-      // cappedKeys version instead checkpointed a df table and joined
-      // it back — two extra corpus materializations that doubled this
-      // operator's sf1 time (1.46 vs 0.65 s) on pure added job cost.
-      val cap = capOverride.getOrElse(adaptiveDfCapOnePass(
-        keyed.groupBy("p50").agg(count(lit(1)).as("df"))))
-      val cand = keyed
-        .groupBy("p50").agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")).between(2, cap))
-        .select(orderedIdPairsRows(col("ids")))
-      val shorter = when(length(col("sa")) <= length(col("sb")), col("sa")).otherwise(col("sb"))
-      val longer = when(length(col("sa")) <= length(col("sb")), col("sb")).otherwise(col("sa"))
-      cand
-        .join(norm.select(col("doc_id").as("doc_a"), col("s").as("sa")), Seq("doc_a"))
-        .join(norm.select(col("doc_id").as("doc_b"), col("s").as("sb")), Seq("doc_b"))
-        .filter(longer.startsWith(shorter))
-        .select(
-          when(length(col("sa")) <= length(col("sb")), col("doc_a")).otherwise(col("doc_b"))
-            .as("doc_short"),
-          when(length(col("sa")) <= length(col("sb")), col("doc_b")).otherwise(col("doc_a"))
-            .as("doc_long"),
-          least(length(col("sa")), length(col("sb"))).as("len_short"),
-          greatest(length(col("sa")), length(col("sb"))).as("len_long"))
-        .orderBy("doc_short", "doc_long")
+  private[graft] def prefixPairs(docs: DataFrame): DataFrame = {
+    val norm = docs.select(col("doc_id"), Text.normText(col("text")).as("s"))
+    val keyed = norm
+      .filter(length(col("s")) >= 50)
+      .select(col("doc_id"), lit(0).as("n"), substring(col("s"), 1, 50).as("p50"))
+    // No cap pass: each doc sits in exactly one prefix bucket, so the
+    // pair mass under the fixed cap, Σ df(df−1)/2 ≤ 499.5·Σdf, always
+    // fits the adaptive budget of 1000·Σdf — the cap can never
+    // tighten. The lazy capped aggregate with the oracle's literal
+    // cap fuses into the operator's single job.
+    val cand = cappedBucketsPlan(keyed, Seq("p50"), 1001)
+      .filter(size(col("ids")).between(2, 1000))
+      .select(orderedPairsRows(col("ids")))
+      .select("doc_a", "doc_b")
+    val shorter = when(length(col("sa")) <= length(col("sb")), col("sa")).otherwise(col("sb"))
+    val longer = when(length(col("sa")) <= length(col("sb")), col("sb")).otherwise(col("sa"))
+    cand
+      .join(norm.select(col("doc_id").as("doc_a"), col("s").as("sa")), Seq("doc_a"))
+      .join(norm.select(col("doc_id").as("doc_b"), col("s").as("sb")), Seq("doc_b"))
+      .filter(longer.startsWith(shorter))
+      .select(
+        when(length(col("sa")) <= length(col("sb")), col("doc_a")).otherwise(col("doc_b"))
+          .as("doc_short"),
+        when(length(col("sa")) <= length(col("sb")), col("doc_b")).otherwise(col("doc_a"))
+          .as("doc_long"),
+        least(length(col("sa")), length(col("sb"))).as("len_short"),
+        greatest(length(col("sa")), length(col("sb"))).as("len_long"))
   }
 
   /** Adapt any frame to the canonical (doc_id, text) shape the
@@ -1045,11 +905,8 @@ object Dedup {
         .select(col("doc_id"), size(col("shs")).as("n"), explode(col("shs")).as("shingle"))
       // adaptive cap only — containment bounds nothing between na and
       // nb (a tiny doc inside a huge one is the POINT), so the
-      // generator's size filter stays off. Fused bucket build: one
-      // tokenize, one exchange, arrays cap-bounded inside the
-      // aggregate (see cappedBuckets; the previous freq-pass +
-      // anti-join shape tokenized the corpus twice).
-      val (_, buckets) = cappedBuckets(entries, docs.count())
+      // generator's size filter stays off.
+      val buckets = cappedBuckets(entries, Seq("shingle"), docs.count())
       val pairs = buckets
         .select(orderedPairsRows(col("ids")))
         .groupBy("doc_a", "doc_b", "na", "nb")
@@ -1238,7 +1095,7 @@ object Dedup {
       // min(na,nb) ≥ 0.49995·max) drops never-qualifying pairs before
       // the pair exchange — identical float semantics to
       // ngramJaccardPairs' fan-out.
-      val (_, buckets) = cappedBuckets(entries, docs.count())
+      val buckets = cappedBuckets(entries, Seq("shingle"), docs.count())
       val gen = buckets.select(orderedPairsRows(col("ids"), 0.5 - 1e-4, minDocB = thr))
       // generator emits doc_a < doc_b with doc_b new; the oracle's
       // (doc_new, doc_other) orientation is: both-new → (a, b)

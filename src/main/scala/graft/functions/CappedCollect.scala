@@ -38,8 +38,10 @@ private[functions] final class CappedIdsBuffer(val cap: Int) {
 }
 
 /** `array_sort(collect_list(struct(doc_id, n)))` with a HARD buffer
-  * cap — the fused bucket build of the shingle inverted-index
-  * operators (d_ngram_jaccard / d_containment / d_incremental).
+  * cap — the one bucket build of every blocking index: the shingle
+  * inverted index (d_ngram_jaccard / d_containment / d_incremental),
+  * the LSH band buckets (d_minhash_lsh) and the prefix buckets
+  * (d_prefix_containment); the latter two carry n = 0.
   *
   * Exactness contract: callers drop every bucket whose document
   * frequency exceeds the operator's df cap (`cap` here is maxCap+1),
@@ -50,12 +52,11 @@ private[functions] final class CappedIdsBuffer(val cap: Int) {
   * struct sort). A bucket that truncates has df ≥ cap = maxCap+1 and
   * is dropped by the caller's `size(ids) ≤ cap` filter at ANY
   * adaptive cap value; `size(ids)` doubles as the exact df for every
-  * non-dropped bucket, which is what lets one aggregate replace the
-  * previous shape's separate count pass + broadcast anti-join + the
-  * second corpus tokenize that fed them (guide §1.2/§2.4). The buffer
-  * cap also bounds partial-aggregation memory per key: a corpus-scale
-  * stopword shingle costs ≤ cap entries per map partition instead of
-  * a multi-million element collect_list array in one task.
+  * non-dropped bucket, so one aggregate yields both the buckets and
+  * the df statistic the adaptive cap needs. The buffer cap also bounds
+  * partial-aggregation memory per key: a corpus-scale stopword shingle
+  * costs ≤ cap entries per map partition instead of a multi-million
+  * element collect_list array in one task.
   */
 case class CappedSortedCollect(idExpr: Expression, nExpr: Expression, cap: Int,
                                mutableAggBufferOffset: Int = 0,

@@ -10,7 +10,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField,
 /** Native ordered-pair fan-out for an inverted-index bucket: given the
   * bucket's ascending-sorted `array<struct<doc_id:long, n:int>>`, emit
   * one row per (i < j) pair — the blocked-dedup candidate generation
-  * of d_ngram_jaccard / d_containment and their derived pipelines.
+  * of every capped bucket index: the shingle operators (d_ngram_jaccard
+  * / d_containment and their derived pipelines) and the size-less
+  * LSH band and prefix buckets, whose entries carry n = 0 and run with
+  * the size filter off.
   *
   * Replaces `explode(flatten(transform(ids, (x,i) => transform(
   * slice(...), y => struct(...)))))`: the HOF chain is interpreted
@@ -185,48 +188,6 @@ case class HammingPairsGen(child: Expression, maxHamming: Int)
             val r = InternalRow(ids(i), ids(j), ham)
             ready = false
             j += 1
-            r
-          }
-        }
-      }
-    }
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Id-only variant for buckets keyed without set sizes (LSH band
-  * buckets, prefix buckets): ascending-sorted `array<long>` → one row
-  * per (i < j) pair. Same lazy-iterator shape as [[OrderedPairsGen]].
-  */
-case class OrderedIdPairsGen(child: Expression)
-    extends UnaryExpression with Generator with CodegenFallback {
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("doc_b", LongType, nullable = false)))
-
-  override def prettyName: String = "graft_ordered_id_pairs"
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = v.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      if (n < 2) Iterator.empty
-      else {
-        val ids = arr.toLongArray()
-        new Iterator[InternalRow] {
-          private var i = 0
-          private var j = 1
-          override def hasNext: Boolean = i < n - 1 && j < n
-          override def next(): InternalRow = {
-            if (!hasNext) throw new NoSuchElementException("OrderedIdPairsGen exhausted")
-            val r = InternalRow(ids(i), ids(j))
-            j += 1
-            if (j >= n) { i += 1; j = i + 1 }
             r
           }
         }

@@ -75,24 +75,16 @@ package object gfunctions {
 
   /** `array_sort(collect_list(struct(doc_id, n)))` with a hard buffer
     * cap — functions.CappedSortedCollect, the fused bucket build of
-    * the shingle inverted-index operators. Buckets that truncate have
-    * df ≥ cap and are dropped by the callers' df filter, so every
-    * surviving array is complete and sorted (the exactness contract
-    * lives on the aggregate's Scaladoc).
+    * every blocking index (shingle, LSH band, prefix). Buckets that
+    * truncate have df ≥ cap and are dropped by the callers' df filter,
+    * so every surviving array is complete and sorted (the exactness
+    * contract lives on the aggregate's Scaladoc).
     */
   def cappedSortedCollect(id: Column, n: Column, cap: Int): Column = {
     import org.apache.spark.sql.graftshim.Shim
     Shim.column(graft.functions.CappedSortedCollect(
       Shim.expression(id.cast("long")), Shim.expression(n.cast("int")), cap)
       .toAggregateExpression())
-  }
-
-  /** Id-only lazy pair fan-out of a sorted `array<long>` bucket as
-    * rows (doc_a, doc_b) — functions.OrderedIdPairsGen.
-    */
-  def orderedIdPairsRows(ids: Column): Column = {
-    import org.apache.spark.sql.graftshim.Shim
-    Shim.column(graft.functions.OrderedIdPairsGen(Shim.expression(ids)))
   }
 
   /** Fused candidate+verify fan-out of a SimHash pigeonhole bucket

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.gfunctions.{hammingPairsRows, orderedIdPairsRows, orderedPairsRows}
+import graft.gfunctions.{hammingPairsRows, orderedPairsRows}
 
 /** The native bucket pair-fan-out generators
-  * (functions.OrderedPairsGen / OrderedIdPairsGen) against a reference
+  * (functions.OrderedPairsGen / HammingPairsGen) against a reference
   * enumeration: all i<j pairs in array order, lossless size filter
   * semantics, degenerate inputs.
   */
@@ -41,9 +41,10 @@ class OrderedPairsGenSpec extends SparkSpec {
       (2L, 10, 3L, 20), (3L, 20, 4L, 21)))
   }
 
-  test("id-only generator matches the struct generator's id projection") {
-    val ids = Seq(Seq(3L, 7L, 8L, 12L)).toDF("ids")
-    val out = ids.select(orderedIdPairsRows(col("ids")))
+  test("n = 0 buckets (LSH band, prefix) emit every i<j pair with the size filter off") {
+    val out = sized(Seq(Seq((3L, 0), (7L, 0), (8L, 0), (12L, 0))))
+      .select(orderedPairsRows(col("ids")))
+      .select("doc_a", "doc_b")
       .as[(Long, Long)].collect().toSeq
     assert(out === Seq((3L, 7L), (3L, 8L), (3L, 12L),
       (7L, 8L), (7L, 12L), (8L, 12L)))

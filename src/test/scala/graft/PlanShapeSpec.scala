@@ -59,27 +59,45 @@ class PlanShapeSpec extends SparkSpec {
       s"the materializing HOF pair chain must be gone:\n$p")
   }
 
-  test("shingle bucket build is the fused capped aggregate: one pass, no join") {
+  test("every blocking key's bucket build is the fused capped aggregate: one pass, no join") {
     // bucket arrays are cap-bounded INSIDE the aggregate
     // (CappedSortedCollect), so the build needs neither a frequency
     // prepass nor a df-filter join ahead of the groupBy — the plan is
-    // scan → explode → ONE aggregate exchange, nothing else
+    // scan → explode → ONE aggregate exchange, nothing else — for the
+    // shingle index, the LSH band buckets and the prefix buckets alike
+    import org.apache.spark.sql.functions.{col, explode, lit, posexplode, size, substring}
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val entries = graft.dedup.Dedup.shingleSets(docs)
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.size(
-          org.apache.spark.sql.functions.col("shs")).as("n"),
-        org.apache.spark.sql.functions.explode(
-          org.apache.spark.sql.functions.col("shs")).as("shingle"))
-    val p = plan(graft.dedup.Dedup.cappedBucketsPlan(entries, 1001))
+    val sets = graft.dedup.Dedup.shingleSets(docs)
+    val entries = Seq(
+      Seq("shingle") ->
+        sets.select(col("doc_id"), size(col("shs")).as("n"), explode(col("shs")).as("shingle")),
+      Seq("band", "bsig") ->
+        sets.select(col("doc_id"), lit(0).as("n"), posexplode(col("shs")).as(Seq("band", "bsig"))),
+      Seq("p50") ->
+        docs.select(col("doc_id"), lit(0).as("n"),
+          substring(graft.text.Text.normText(col("text")), 1, 50).as("p50")))
+    for ((keys, e) <- entries) {
+      val p = plan(graft.dedup.Dedup.cappedBucketsPlan(e, keys, 1001))
+      val k = keys.mkString(",")
+      assert(p.contains("graft_capped_collect"),
+        s"$k: bucket build must be the fused capped aggregate:\n$p")
+      assert(!p.contains("Join"),
+        s"$k: the df-filter join must be gone (the cap lives in the aggregate):\n$p")
+      // one keyed exchange only (Par.spread's round-robin rebalance of
+      // the raw scan is not a keyed shuffle)
+      assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
+        s"$k: bucket build must be a single keyed exchange:\n$p")
+    }
+  }
+
+  test("d_prefix_containment: capped aggregate buckets, native generator fan-out") {
+    val p = plan(graft.dedup.Dedup.prefixContainment.run(spark, sfDir))
     assert(p.contains("graft_capped_collect"),
-      s"bucket build must be the fused capped aggregate:\n$p")
-    assert(!p.contains("Join"),
-      s"the df-filter join must be gone (the cap lives in the aggregate):\n$p")
-    // one keyed exchange only (Par.spread's round-robin rebalance of
-    // the raw scan is not a keyed shuffle)
-    assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
-      s"bucket build must be a single keyed exchange:\n$p")
+      s"prefix buckets must be the fused capped aggregate:\n$p")
+    assert(p.contains("graft_ordered_pairs"),
+      s"prefix pair fan-out must be the native generator:\n$p")
+    assert(!p.contains("collect_list"),
+      s"the uncapped collect_list bucket build must be gone:\n$p")
   }
 
   test("simhash candidate stage is the fused hamming generator, not a block self-join") {
