@@ -41,7 +41,7 @@ class OrderedPairsGenSpec extends SparkSpec {
       (2L, 10, 3L, 20), (3L, 20, 4L, 21)))
   }
 
-  test("n = 0 buckets (LSH band, prefix) emit every i<j pair with the size filter off") {
+  test("n = 0 buckets (LSH band, prefix) emit every i<j pair") {
     val out = sized(Seq(Seq((3L, 0), (7L, 0), (8L, 0), (12L, 0))))
       .select(orderedPairsRows(col("ids")))
       .select("doc_a", "doc_b")

@@ -59,35 +59,43 @@ class PlanShapeSpec extends SparkSpec {
       s"the materializing HOF pair chain must be gone:\n$p")
   }
 
-  test("every blocking key's bucket build is the fused capped aggregate: one pass, no join") {
-    // bucket arrays are cap-bounded INSIDE the aggregate
-    // (CappedSortedCollect), so the build needs neither a frequency
-    // prepass nor a df-filter join ahead of the groupBy — the plan is
-    // scan → explode → ONE aggregate exchange, nothing else — for the
-    // shingle index, the LSH band buckets and the prefix buckets alike
-    import org.apache.spark.sql.functions.{col, explode, lit, posexplode, size, substring}
+  // bucket arrays are cap-bounded INSIDE the aggregate
+  // (CappedSortedCollect), so the build needs neither a frequency
+  // prepass nor a df-filter join ahead of the groupBy — the plan is
+  // scan → explode → ONE aggregate exchange, nothing else
+  private def assertFusedBucketBuild(entries: org.apache.spark.sql.DataFrame,
+                                     keys: Seq[String]): Unit = {
+    val p = plan(graft.dedup.Dedup.cappedBucketsPlan(entries, keys, 1001))
+    val k = keys.mkString(",")
+    assert(p.contains("graft_capped_collect"),
+      s"$k: bucket build must be the fused capped aggregate:\n$p")
+    assert(!p.contains("Join"),
+      s"$k: the df-filter join must be gone (the cap lives in the aggregate):\n$p")
+    // one keyed exchange only (Par.spread's round-robin rebalance of
+    // the raw scan is not a keyed shuffle)
+    assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
+      s"$k: bucket build must be a single keyed exchange:\n$p")
+  }
+
+  test("shingle bucket build is the fused capped aggregate: one pass, no join") {
+    import org.apache.spark.sql.functions.{col, explode, size}
+    val sets = graft.dedup.Dedup.shingleSets(graft.sources.Tables.documents(spark, sfDir))
+    assertFusedBucketBuild(
+      sets.select(col("doc_id"), size(col("shs")).as("n"), explode(col("shs")).as("shingle")),
+      Seq("shingle"))
+  }
+
+  test("LSH band and prefix bucket builds are the fused capped aggregate") {
+    import org.apache.spark.sql.functions.{col, lit, posexplode, substring}
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val sets = graft.dedup.Dedup.shingleSets(docs)
-    val entries = Seq(
-      Seq("shingle") ->
-        sets.select(col("doc_id"), size(col("shs")).as("n"), explode(col("shs")).as("shingle")),
-      Seq("band", "bsig") ->
-        sets.select(col("doc_id"), lit(0).as("n"), posexplode(col("shs")).as(Seq("band", "bsig"))),
-      Seq("p50") ->
-        docs.select(col("doc_id"), lit(0).as("n"),
-          substring(graft.text.Text.normText(col("text")), 1, 50).as("p50")))
-    for ((keys, e) <- entries) {
-      val p = plan(graft.dedup.Dedup.cappedBucketsPlan(e, keys, 1001))
-      val k = keys.mkString(",")
-      assert(p.contains("graft_capped_collect"),
-        s"$k: bucket build must be the fused capped aggregate:\n$p")
-      assert(!p.contains("Join"),
-        s"$k: the df-filter join must be gone (the cap lives in the aggregate):\n$p")
-      // one keyed exchange only (Par.spread's round-robin rebalance of
-      // the raw scan is not a keyed shuffle)
-      assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
-        s"$k: bucket build must be a single keyed exchange:\n$p")
-    }
+    assertFusedBucketBuild(
+      sets.select(col("doc_id"), lit(0).as("n"), posexplode(col("shs")).as(Seq("band", "bsig"))),
+      Seq("band", "bsig"))
+    assertFusedBucketBuild(
+      docs.select(col("doc_id"), lit(0).as("n"),
+        substring(graft.text.Text.normText(col("text")), 1, 50).as("p50")),
+      Seq("p50"))
   }
 
   test("d_prefix_containment: capped aggregate buckets, native generator fan-out") {
