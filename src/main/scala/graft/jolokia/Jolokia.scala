@@ -1,6 +1,6 @@
 package graft.jolokia
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -12,12 +12,15 @@ import graft.GraftQuery
   */
 object Jolokia {
 
+  private def envelope(value: String): DataType = DataType.fromDDL(
+    "STRUCT<status: INT, timestamp: LONG, request: STRUCT<mbean: STRING, type: STRING>, " +
+      s"value: $value>")
+
   /** Jolokia read-response envelope (wildcard read: value is a map of
     * mbean name → attribute map).
     */
-  val envelopeSchema: DataType = DataType.fromDDL(
-    "STRUCT<status: INT, timestamp: LONG, request: STRUCT<mbean: STRING, type: STRING>, " +
-      "value: MAP<STRING, MAP<STRING, STRING>>>")
+  val envelopeSchema: DataType = envelope("MAP<STRING, MAP<STRING, STRING>>")
+  val singleEnvelopeSchema: DataType = envelope("MAP<STRING, STRING>")
 
   /** Normalize a column of Jolokia JSON payloads into flat metric rows:
     * one row per (mbean, attribute), the mbean name split into domain +
@@ -29,56 +32,47 @@ object Jolokia {
     * are dropped like the reference does.
     */
   def normalize(payloads: DataFrame, payloadCol: String, hostCol: String,
-                serverTypeCol: String): DataFrame = {
-    val parsed = payloads
-      .withColumn("_env", from_json(col(payloadCol), envelopeSchema))
-      .filter(col("_env.status") === 200)
-    parsed
-      .select(col(hostCol).as("injected_host_name"),
-        col(serverTypeCol).as("injected_server_type"),
-        col("_env.timestamp").as("created_date_time"),
-        explode(col("_env.value")).as(Seq("mbean_name", "attrs")))
-      .withColumn("injected_bean_name", split(col("mbean_name"), ":").getItem(0))
-      .withColumn("bean_props",
-        map_from_entries(transform(
-          split(split(col("mbean_name"), ":").getItem(1), ","),
-          kv => struct(split(kv, "=").getItem(0).as("key"),
-            split(kv, "=").getItem(1).as("value")))))
-      .select(col("injected_host_name"), col("injected_server_type"),
-        col("created_date_time"), col("mbean_name"), col("injected_bean_name"),
-        col("bean_props"), explode(col("attrs")).as(Seq("attribute", "value")))
-  }
+                serverTypeCol: String): DataFrame =
+    records(payloads, payloadCol, hostCol, serverTypeCol, envelopeSchema,
+      Seq(explode(col("_env.value")).as(Seq("mbean_name", "attrs"))))
 
-  /** Single-mbean read envelope: `value` is the attribute map itself
-    * and the mbean name comes from the request (the reference
-    * normalizes both shapes — JMXScraper.py:120-146 wraps a
-    * single-mbean response into the wildcard form before flattening).
-    */
-  val singleEnvelopeSchema: DataType = DataType.fromDDL(
-    "STRUCT<status: INT, timestamp: LONG, request: STRUCT<mbean: STRING, type: STRING>, " +
-      "value: MAP<STRING, STRING>>")
-
-  /** Normalize single-mbean responses to the same flat record shape as
-    * [[normalize]]: wrap the attribute map under the requested mbean
-    * name, then share the wildcard path's splitting/injection.
+  /** Normalize single-mbean responses, whose `value` is the attribute
+    * map itself, to the same flat record shape as [[normalize]], under
+    * the requested mbean name (the reference wraps a single-mbean
+    * response into the wildcard form, JMXScraper.py:120-146).
     */
   def normalizeSingle(payloads: DataFrame, payloadCol: String, hostCol: String,
-                      serverTypeCol: String): DataFrame = {
-    val parsed = payloads
-      .withColumn("_env", from_json(col(payloadCol), singleEnvelopeSchema))
+                      serverTypeCol: String): DataFrame =
+    records(payloads, payloadCol, hostCol, serverTypeCol, singleEnvelopeSchema,
+      Seq(col("_env.request.mbean").as("mbean_name"), col("_env.value").as("attrs")))
+
+  /** The record builder both envelope shapes share: `beans` selects
+    * `mbean_name` and `attrs` from the parsed `_env`. The name split is
+    * total, so no mbean name can fail the batch: a name without `:`
+    * has null props, a property without `=` a null value, and a
+    * repeated key keeps its last value (the reference builds a Python
+    * dict).
+    */
+  private def records(payloads: DataFrame, payloadCol: String, hostCol: String,
+                      serverTypeCol: String, schema: DataType,
+                      beans: Seq[Column]): DataFrame = {
+    val name = split(col("mbean_name"), ":")
+    val kvs = col("_kvs")
+    payloads
+      .withColumn("_env", from_json(col(payloadCol), schema))
       .filter(col("_env.status") === 200)
-    parsed
-      .select(col(hostCol).as("injected_host_name"),
+      .select(Seq(col(hostCol).as("injected_host_name"),
         col(serverTypeCol).as("injected_server_type"),
-        col("_env.timestamp").as("created_date_time"),
-        col("_env.request.mbean").as("mbean_name"),
-        col("_env.value").as("attrs"))
-      .withColumn("injected_bean_name", split(col("mbean_name"), ":").getItem(0))
-      .withColumn("bean_props",
-        map_from_entries(transform(
-          split(split(col("mbean_name"), ":").getItem(1), ","),
-          kv => struct(split(kv, "=").getItem(0).as("key"),
-            split(kv, "=").getItem(1).as("value")))))
+        col("_env.timestamp").as("created_date_time")) ++ beans: _*)
+      // staged, so the last-wins filter reads the pairs once per name
+      .withColumn("_kvs", transform(split(get(name, lit(1)), ","), kv => {
+        val p = split(kv, "=")
+        struct(get(p, lit(0)).as("key"), get(p, lit(1)).as("value"))
+      }))
+      // before the attribute explode, so once per mbean
+      .withColumn("injected_bean_name", get(name, lit(0)))
+      .withColumn("bean_props", map_from_entries(filter(kvs, (e, i) =>
+        !exists(slice(kvs, i + 2, size(kvs)), x => x("key") === e("key")))))
       .select(col("injected_host_name"), col("injected_server_type"),
         col("created_date_time"), col("mbean_name"), col("injected_bean_name"),
         col("bean_props"), explode(col("attrs")).as(Seq("attribute", "value")))

@@ -100,7 +100,8 @@ object IvfStore {
   /** The explicit read schema for a `cid=`-partitioned assigned dir:
     * directory-name inference would type the cid partition column INT,
     * and the repairing long cast wraps the join key — blocking both
-    * DPP and the static `cid IN (...)` push (the AnnLayoutAb lesson).
+    * DPP and the static `cid IN (...)` push (measured in
+    * ANNLAYOUT_AB_VEC2M_r13.json).
     */
   private val AssignedSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("vec_id",
@@ -319,7 +320,7 @@ object IvfStore {
     * rule with no corpus-sized recompute). A quantizer that still
     * represents the incoming data reads ~1.0; appends drawn from
     * clusters the training never saw read well above it. Measured
-    * (AddProbe, ADDPROBE_*_r12): stationary appends read 0.999 at
+    * (ADDPROBE_*_r12.json): stationary appends read 0.999 at
     * every level from 2x to 10x the trained corpus, drifted appends
     * read 1.187 (200k base) / 2.065 (2M base). Trigger rule: schedule
     * [[compactRetrain]] when a batch exceeds ~1.1 (the stationary

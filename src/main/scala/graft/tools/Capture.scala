@@ -1,6 +1,7 @@
 package graft.tools
 
-/** Capture-hygiene helpers shared by the A/B / probe tools.
+/** Capture-hygiene helpers shared by `Bench`, `AnnProbe`,
+  * `StreamThroughputProbe` and perfbench's `Main`.
   *
   * The r10 verdict flagged several headline captures taken at host
   * load 14–30 (PREFIX_AB at 16.2, ANNPROBE_VEC2M at 29.2): each

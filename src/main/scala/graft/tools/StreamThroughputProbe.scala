@@ -314,9 +314,10 @@ object StreamThroughputProbe {
         // frozen centroids (built from sfDir's embeddings, persisted
         // with meta) against rate-driven 64-dim vector batches — per
         // batch one map-side argmin + a k-row agg into a noop sink.
-        // The vectors are the AddProbe clustered mixing law, so the
-        // assignment cost profile matches a real corpus, and the
-        // health row's d2_ratio reads the stationary ~1 band.
+        // The vectors follow GenScale's clustered mixing law, the
+        // appends measured in ADDPROBE_*_r12.json, so the assignment
+        // cost profile matches a real corpus, and the health row's
+        // d2_ratio reads the stationary ~1 band.
         // SPARK_GRAFT_HEALTH_ADAPTIVE=1 publishes the corpus-adaptive
         // index instead of the fixed k=8 — the production-k regime
         // (k=200 at a 2M-vector corpus), where the per-row argmin is

@@ -40,6 +40,29 @@ class JolokiaSpec extends SparkSpec {
     assert(r.getAs[Long]("created_date_time") === 1700000000L)
   }
 
+  test("odd mbean names parse totally beside a good payload: last key wins, missing parts are null") {
+    val oddPayload =
+      """{"status":200,"timestamp":1700000002,
+         "request":{"mbean":"*:*","type":"read"},
+         "value":{"kafka.server:type=A,type=B":{"Count":"1"},
+                  "kafka.server":{"Count":"2"},
+                  "a:foo":{"Count":"3"}}}"""
+    val mixed = graft.jolokia.Jolokia.normalize(
+      Seq((okPayload, "host-1", "KafkaBroker"), (oddPayload, "host-3", "KafkaBroker"))
+        .toDF("payload", "host", "server_type"),
+      "payload", "host", "server_type")
+    val odd = mixed.filter($"injected_host_name" === "host-3").collect()
+      .map(r => r.getAs[String]("mbean_name") ->
+        (r.getAs[String]("injected_bean_name"), r.getAs[Map[String, String]]("bean_props")))
+      .toMap
+    assert(odd === Map(
+      "kafka.server:type=A,type=B" -> ("kafka.server", Map("type" -> "B")),
+      "kafka.server" -> ("kafka.server", null),
+      "a:foo" -> ("a", Map("foo" -> null))))
+    val good = mixed.filter($"injected_host_name" === "host-1").orderBy("attribute")
+    assert(good.collect().toSeq === normalized.orderBy("attribute").collect().toSeq)
+  }
+
   test("k8s discovery honors annotations: disabled/pending/unannotated pods excluded") {
     val pods = graft.jolokia.Jolokia.discover(spark).collect()
     assert(pods.map(_.getAs[String]("pod_name")).toSeq ===
