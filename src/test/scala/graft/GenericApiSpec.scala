@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** The generic library APIs work on arbitrary schemas, not just the
@@ -40,12 +42,19 @@ class GenericApiSpec extends SparkSpec {
   }
 
   test("Pipeline.Config with a single sink enabled writes only that sink") {
-    val esDir = Files.createTempDirectory("graft_es_only").toString
-    val src = Seq((1L, java.sql.Timestamp.valueOf("2024-03-01 10:00:00"), 5.0))
-      .toDF("id", "ts", "v")
-    // batch write path via the same sink the pipeline uses
-    graft.sinks.Sinks.writeEsBulk(
-      src.withColumn("doc", to_json(struct($"id", $"v"))), "ts", "doc", "m", esDir)
+    val root = Files.createTempDirectory("graft_es_only")
+    val in = Files.createDirectories(root.resolve("in"))
+    Files.write(in.resolve("r.json"),
+      """{"id":1,"ts":"2024-03-01T10:00:00Z","user_id":3,"v":5.0}""".getBytes("UTF-8"))
+    val esDir = root.resolve("es").toString
+    val q = graft.streaming.Pipeline.start(
+      spark.readStream.schema("id LONG, ts TIMESTAMP, user_id LONG, v DOUBLE").json(in.toString),
+      "ts", graft.streaming.Pipeline.Config(indexPrefix = "m", esDir = Some(esDir)),
+      Files.createTempDirectory("graft_es_only_ckpt").toString)
+    try q.processAllAvailable() finally q.stop()
+    val written = Files.list(root)
+    try assert(written.iterator().asScala.map(_.getFileName.toString).toSet === Set("in", "es"))
+    finally written.close()
     val idx = spark.read.text(esDir).select($"es_index".cast("string"))
       .distinct().as[String].collect()
     assert(idx.toSeq === Seq("m-2024-03-01"))
