@@ -398,15 +398,6 @@ object Sim {
     pubMemo.clear()
   })
 
-  private def deleteDirQuietly(dir: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rec)
-      f.delete()
-    }
-    try rec(new java.io.File(dir))
-    catch { case scala.util.control.NonFatal(_) => () }
-  }
-
   /** Delete a published temp index dir once (if ever) its build
     * completes — immediate for a done future, deferred via
     * whenComplete for one still in flight, a no-op on failure (an
@@ -414,7 +405,8 @@ object Sim {
     */
   private def deleteWhenDone(
       f: java.util.concurrent.CompletableFuture[String]): Unit =
-    f.whenComplete((dir, err) => if (err == null && dir != null) deleteDirQuietly(dir))
+    f.whenComplete((dir, err) =>
+      if (err == null && dir != null) graft.Caching.deleteRecursively(dir))
 
   def publishedIndexDir(s: SparkSession, d: String, k: Int, iters: Int,
                         partitioned: Boolean = false): String = {
@@ -439,7 +431,7 @@ object Sim {
     }
     if (isBuilder) {
       try {
-        val dir = java.nio.file.Files.createTempDirectory("graft_ivf_pub").toString
+        val dir = graft.Caching.sessionTempDir("graft_ivf_pub")
         IvfStore.save(ivfIndex(s, d, k, iters), dir, partitioned)
         fut.complete(dir)
       } catch {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -25,39 +24,10 @@ object Streaming {
 
   private val runSeq = new AtomicInteger(0)
 
-  /** Scratch checkpoint root for the harness streams. These queries
-    * checkpoint into throwaway temp dirs (memory/per-batch-dir sinks,
-    * deleted with the JVM) — the checkpoint exists because the API
-    * requires one, not for recovery — yet every micro-batch pays
-    * multiple fsyncs into it (offset WAL, commit log, one state-store
-    * delta per shuffle partition). On hosts with slow durable /tmp
-    * those fsyncs dominate each stream's fixed cost (guide §6: put
-    * scratch I/O on the fast tier). Default: tmpfs (/dev/shm) when
-    * present, else java.io.tmpdir. SPARK_GRAFT_CKPT_ROOT overrides —
-    * a deploy that wants recoverable checkpoints points this at
-    * durable storage, which is the production contract anyway.
+  /** A throwaway checkpoint dir on the scratch root (see
+    * graft.Caching.scratchRoot), released at the next query boundary.
     */
-  private def ckptDir(): String = scratchTempDir("graft_ckpt")
-
-  /** A throwaway scratch dir on the fast tier (same root rule as the
-    * checkpoints: SPARK_GRAFT_CKPT_ROOT override, else tmpfs when
-    * present, else java.io.tmpdir), registered for recursive delete at
-    * the per-query release boundary — tmpfs use stays bounded to one
-    * query's scratch however long the suite is.
-    */
-  private def scratchTempDir(prefix: String): String = {
-    val root = sys.env.get("SPARK_GRAFT_CKPT_ROOT").map(java.nio.file.Paths.get(_))
-      .orElse {
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isWritable(shm)) Some(shm) else None
-      }
-    val dir = root match {
-      case Some(r) => Files.createTempDirectory(r, prefix).toString
-      case None => Files.createTempDirectory(prefix).toString
-    }
-    graft.Caching.registerTransientDir(dir)
-    dir
-  }
+  private def ckptDir(): String = graft.Caching.scratchTempDir("graft_ckpt")
 
   /** `<table>.parquet` as a micro-batched stream, for BOTH table
     * layouts: the driver's testdata is one parquet FILE per table
@@ -132,10 +102,7 @@ object Streaming {
   private def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    // A/B override for the state-parallelism sizing experiments
-    // (results are partition-count independent — StateRescaleSpec)
-    val n2 = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse(n)
-    s.conf.set(key, n2.toString)
+    s.conf.set(key, n.toString)
     try body finally s.conf.set(key, prev)
   }
 
@@ -169,45 +136,55 @@ object Streaming {
       s.table(name)
     }
 
-  /** [[runToTable]] for CORPUS-sized sink tables: per-batch parquet
-    * dirs on the scratch tier instead of the memory sink. The memory
-    * sink collects the materialized table to the DRIVER and hands
-    * consumers a LocalRelation — every downstream job ships the rows
-    * back out inside task binaries (measured: 18.5 MB task-size
-    * warnings and a driver-serial collect for st_sessions' 9.5M-row
-    * table at the 100× corpus; guide §5 — the driver should do no
-    * data work). Fine for series-bounded outputs; this variant keeps
-    * data-sized outputs distributed: Append batches land in
-    * exactly-once `batch=<id>` overwrite dirs (the st_dedup_ingest
-    * pattern), Complete mode overwrites ONE table dir (the last batch
-    * IS the materialized table), and the result is a parquet scan.
-    * Same rows, proven by the unchanged oracles; row order differs,
-    * which every consumer already normalizes with orderBy.
+  /** [[runToTable]] for CORPUS-sized sink tables: [[runPerBatch]]'s
+    * identity case at the stream shuffle width. The memory sink
+    * collects the materialized table to the DRIVER and hands consumers
+    * a LocalRelation — every downstream job ships the rows back out
+    * inside task binaries (measured: 18.5 MB task-size warnings and a
+    * driver-serial collect for st_sessions' 9.5M-row table at the 100×
+    * corpus; guide §5 — the driver should do no data work). Fine for
+    * series-bounded outputs; this variant keeps data-sized outputs
+    * distributed as a parquet scan. Same rows, proven by the unchanged
+    * oracles; row order differs, which every consumer already
+    * normalizes with orderBy.
     */
   private def runToFiles(s: SparkSession, out: DataFrame, mode: OutputMode,
                          inputBytes: Long = 0L): DataFrame =
     withStreamPartitions(s,
       if (inputBytes >= StreamPartsThresholdBytes)
         s.sparkContext.defaultParallelism
-      else 8) {
-      val dir = scratchTempDir("graft_stream_out")
-      val ckpt = ckptDir()
-      val complete = mode == OutputMode.Complete()
-      val q = out.writeStream
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val target = if (complete) s"$dir/table" else s"$dir/batch=$id"
-          b.write.mode("overwrite").parquet(target)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      if (complete) s.read.parquet(s"$dir/table")
-      else
-        // `batch` is the exactly-once partition dir, not a result column
-        s.read.option("basePath", dir).parquet(dir).drop("batch")
-    }
+      else 8)(runPerBatch(s, out, mode)(identity))
+
+  /** The one per-batch-files stream harness: run `src` to completion,
+    * writing each micro-batch's `f(b)` to a scratch dir, and return the
+    * result as a parquet scan. Append batches land in exactly-once
+    * `batch=<id>` overwrite dirs (a replayed batch rewrites its own
+    * dir, never duplicates — Structured Streaming's idempotent sink per
+    * epoch); Complete mode overwrites ONE `table` dir (the last batch
+    * IS the materialized table). `batch` is the exactly-once partition
+    * dir, not a result column, so the scan drops it. Runs at the
+    * caller's shuffle width: the serving queries (static artifact ×
+    * streaming batches) call it directly, so their per-batch plans
+    * keep the session's batch width. The dirs are released at the
+    * next releaseTransient(), so the consumer drains the frame first.
+    */
+  private def runPerBatch(s: SparkSession, src: DataFrame, mode: OutputMode)(
+      f: DataFrame => DataFrame): DataFrame = {
+    val dir = graft.Caching.scratchTempDir("graft_stream_out")
+    val complete = mode == OutputMode.Complete()
+    val q = src.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", ckptDir())
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        val target = if (complete) s"$dir/table" else s"$dir/batch=$id"
+        f(b).write.mode("overwrite").parquet(target)
+      }
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    if (complete) s.read.parquet(s"$dir/table")
+    else s.read.option("basePath", dir).parquet(dir).drop("batch")
+  }
 
   /** st_pipeline: readStream → jolokia flatten → watermark → 1h
     * windowed rollup — the m1→m2 chain as one continuous query.
@@ -311,7 +288,7 @@ object Streaming {
       .toDF()
   }
 
-  /** st_sinks: foreachBatch fan-out of every micro-batch to both sinks
+  /** st_sinks: Pipeline.start fan-out of every micro-batch to both sinks
     * (main.py's appender loop): ES bulk NDJSON partitioned by the
     * date-rotated index, and Kafka-shaped key-partitioned JSONL. The
     * query's result is read back from the ES sink's files — per-index
@@ -328,13 +305,12 @@ object Streaming {
       GROUP BY 1
       ORDER BY es_index"""),
     (s, d) => {
-      val esDir = Files.createTempDirectory("graft_es_sink").toString
-      val kafkaDir = Files.createTempDirectory("graft_kafka_sink").toString
+      val esDir = graft.Caching.scratchTempDir("graft_es_sink")
+      val kafkaDir = graft.Caching.scratchTempDir("graft_kafka_sink")
       val src = streamEvents(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      val ckpt = ckptDir()
       val q = Pipeline.start(src, "ts",
-        Pipeline.Config(esDir = Some(esDir), kafkaDir = Some(kafkaDir)), ckpt)
+        Pipeline.Config(esDir = Some(esDir), kafkaDir = Some(kafkaDir)), ckptDir())
       q.processAllAvailable()
       q.stop()
       // this query's wall time tracks container disk throughput (a
@@ -851,54 +827,25 @@ object Streaming {
   /** st_ann: online ANN serving — probe batches arrive as a stream and
     * each micro-batch searches the STATIC IVF index (built once,
     * centroids as literals, candidates via the cid equi-join): the
-    * lookup-service shape, where the index is a published artifact
-    * (IvfStore) and probes are the unbounded side. Exactly-once to the
-    * result sink via per-batch overwrite directories (same contract as
-    * Pipeline). In the single-micro-batch harness the result is
-    * exactly s_ivf_search, whose oracle applies verbatim.
+    * lookup-service shape, where the index is a built artifact and
+    * probes are the unbounded side. Served flat from Sim.ivfIndex: a
+    * batch of 10 probes × nprobe 2 covers all k = 8 cells, which is
+    * exactly when IvfStore.partitionedLayoutDue rules out the
+    * cid-partitioned layout (that layout's pruning is gated in
+    * IvfStoreSpec). Exactly-once per-batch dirs via [[runPerBatch]].
+    * In the single-micro-batch harness the result is exactly
+    * s_ivf_search, whose oracle applies verbatim.
     */
   val streamAnn = GraftQuery(
     "st_ann",
     graft.sim.Sim.ivfSearch.oracle,
     (s, d) => {
-      // cid-partitioned serving layout, chosen by the DEPLOY RULE at
-      // index-build time (IvfStore.partitionedLayoutDue): publish
-      // partitioned and serve from the artifact — probed cells pushed
-      // as static partition filters (Sim.searchIvfProbes prunes when
-      // idx.prunable; measured 1.33x on sparse batches,
-      // ANNLAYOUT_AB_VEC2M_r13) — exactly when a typical probe batch
-      // cannot cover the index. This harness geometry (10 probes ×
-      // nprobe 2 ≥ k = 8: every batch covers all cells) resolves to
-      // the flat in-memory path, so default plans are byte-unchanged.
-      // SPARK_GRAFT_ANN_PARTITIONED=1/0 overrides the rule either way.
-      val partitioned = sys.env.get("SPARK_GRAFT_ANN_PARTITIONED") match {
-        case Some("1") => true
-        case Some("0") => false
-        case _ => graft.sim.IvfStore.partitionedLayoutDue(
-          expectedBatchProbes = 10L, nprobe = 2, k = 8)
-      }
-      val idx =
-        if (partitioned)
-          graft.sim.IvfStore.load(s,
-            graft.sim.Sim.publishedIndexDir(s, d, k = 8, iters = 3,
-              partitioned = true))
-        else graft.sim.Sim.ivfIndex(s, d, k = 8, iters = 3)
-      val outDir = Files.createTempDirectory("graft_ann_out").toString
-      val ckpt = ckptDir()
+      val idx = graft.sim.Sim.ivfIndex(s, d, k = 8, iters = 3)
       val probes = streamTable(s, d, "embeddings")
         .filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"),
           col("embedding").cast("array<double>").as("pv"))
-      val q = probes.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sim.Sim.searchIvfProbes(idx, b)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.option("basePath", outDir).parquet(outDir)
+      runPerBatch(s, probes, OutputMode.Append())(graft.sim.Sim.searchIvfProbes(idx, _))
         .select("probe_id", "neighbor_id", "rank", "cos_sim")
         .orderBy("probe_id", "rank")
     },
@@ -956,26 +903,17 @@ object Streaming {
       val meta = graft.sim.IvfStore.loadMeta(s, dir)
       val thr = graft.sources.Tables.embeddings(s, d)
         .agg(floor(lit(0.9) * (max("vec_id") + 1)).cast("long")).head().getLong(0)
-      val outDir = Files.createTempDirectory("graft_health_out").toString
-      val ckpt = ckptDir()
       val arrivals = streamTable(s, d, "embeddings")
         .filter(col("vec_id") >= thr)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val q = arrivals.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          // an EMPTY micro-batch (file source re-trigger with nothing
-          // new) would aggregate to one all-null health row and
-          // pollute the persisted output — skip it; the trigger rule
-          // is about arriving data, and no data is trivially healthy
-          if (!b.isEmpty)
-            graft.sim.Sim.indexHealth(b, idx.centroids, meta)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.option("basePath", outDir).parquet(outDir)
+      runPerBatch(s, arrivals, OutputMode.Append()) { b =>
+        // an EMPTY micro-batch (file source re-trigger with nothing
+        // new) aggregates to one all-null health row — drop it; the
+        // trigger rule is about arriving data, and no data is
+        // trivially healthy. A filter, not a per-batch isEmpty job.
+        graft.sim.Sim.indexHealth(b, idx.centroids, meta)
+          .filter(col("n_batch").isNotNull)
+      }
         .select("n_batch", "d2_ratio", "cell_imbalance", "retrain_due")
         .orderBy("n_batch")
     },
@@ -1003,19 +941,8 @@ object Streaming {
       // blocks, so only the tracked registry frees them per-query.
       val lr = graft.Caching.releaseAfter(
         Text.dsirModel(graft.sources.Tables.documents(s, d)))
-      val outDir = Files.createTempDirectory("graft_dsir_out").toString
-      val ckpt = ckptDir()
-      val docs = streamTable(s, d, "documents")
-      val q = docs.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          Text.dsirScore(b, lr)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val scored = s.read.option("basePath", outDir).parquet(outDir)
+      val scored = runPerBatch(s, streamTable(s, d, "documents"), OutputMode.Append())(
+        Text.dsirScore(_, lr))
         .select("doc_id", "dsir_weight")
       Text.dsirSelect(scored)
     },
@@ -1036,22 +963,12 @@ object Streaming {
       val idx = graft.sim.Sim.ivfIndex(s, d, k = 8, iters = 3)
       val labels = graft.Caching.releaseAfter(s.read.parquet(s"$d/embeddings.parquet")
         .selectExpr("vec_id", "label"))
-      val outDir = Files.createTempDirectory("graft_fann_out").toString
-      val ckpt = ckptDir()
       val probes = streamTable(s, d, "embeddings")
         .filter(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"),
           col("embedding").cast("array<double>").as("pv"))
-      val q = probes.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.sim.Sim.searchIvfProbesFiltered(idx, labels, b)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.option("basePath", outDir).parquet(outDir)
+      runPerBatch(s, probes, OutputMode.Append())(
+        graft.sim.Sim.searchIvfProbesFiltered(idx, labels, _))
         .select("probe_id", "neighbor_id", "rank", "cos_sim")
         .orderBy("probe_id", "rank")
     },
@@ -1082,29 +999,20 @@ object Streaming {
       // (DedupStore.saveWindowIndex); the streaming job then boots
       // from the artifact dir — bloom from its 16 KB table without
       // touching the hash index, hashes as a parquet scan.
-      val idxDir = Files.createTempDirectory("graft_ingest_idx").toString
+      val idxDir = graft.Caching.scratchTempDir("graft_ingest_idx")
       DedupStore.saveWindowIndex(docs.filter(col("doc_id") < thr), idxDir)
       val widx = DedupStore.loadWindowIndex(s, idxDir)
       val corpus = widx.hashes
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val bloom = widx.bloom
-      val outDir = Files.createTempDirectory("graft_ingest_out").toString
-      val ckpt = ckptDir()
       val arrivals = streamTable(s, d, "documents").filter(col("doc_id") >= thr)
-      val q = arrivals.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          Dedup.spanStats(
-              Dedup.bloomProbe(Dedup.windowTable(b), bloom)
-                .join(corpus, Seq("h"), "left_semi"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+      val stats = runPerBatch(s, arrivals, OutputMode.Append()) { b =>
+        Dedup.spanStats(
+          Dedup.bloomProbe(Dedup.windowTable(b), bloom)
+            .join(corpus, Seq("h"), "left_semi"))
+      }
       corpus.unpersist(blocking = false)
-      s.read.option("basePath", outDir).parquet(outDir)
-        .select("doc_id", "n_tokens", "dup_windows", "dup_tokens", "dup_frac")
+      stats.select("doc_id", "n_tokens", "dup_windows", "dup_tokens", "dup_frac")
         .orderBy("doc_id")
     },
   )
@@ -1128,19 +1036,8 @@ object Streaming {
       // model artifacts = 6 coefficients + the f1 normalizer scalar
       // (trained once per dir, shared with t_quality_probe)
       val (beta, maxTokens) = Text.probeModel(s, d)
-      val outDir = Files.createTempDirectory("graft_probe_out").toString
-      val ckpt = ckptDir()
-      val docs = streamTable(s, d, "documents")
-      val q = docs.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          Text.scoreProbe(Text.probeFeatures(b, maxTokens = Some(maxTokens)), beta)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val scored = s.read.option("basePath", outDir).parquet(outDir)
+      val scored = runPerBatch(s, streamTable(s, d, "documents"), OutputMode.Append())(
+        b => Text.scoreProbe(Text.probeFeatures(b, maxTokens = Some(maxTokens)), beta))
         .select("doc_id", "score", "is_target")
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("score").desc, col("doc_id"))
@@ -1174,19 +1071,8 @@ object Streaming {
       val pair = graft.Caching.releaseAfter(pair0)
       val ctx = graft.Caching.releaseAfter(ctx0)
       val vocab = graft.Caching.releaseAfter(vocab0)
-      val outDir = Files.createTempDirectory("graft_lm_out").toString
-      val ckpt = ckptDir()
-      val docs = streamTable(s, d, "documents")
-      val q = docs.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          Text.lmScore(b, pair, ctx, vocab)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val scored = s.read.option("basePath", outDir).parquet(outDir)
+      val scored = runPerBatch(s, streamTable(s, d, "documents"), OutputMode.Append())(
+        Text.lmScore(_, pair, ctx, vocab))
         .select("doc_id", "n_bigrams", "avg_nll")
       Text.lmTertiles(scored)
     },

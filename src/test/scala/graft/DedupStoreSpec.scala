@@ -35,7 +35,7 @@ class DedupStoreSpec extends SparkSpec {
 
   test("save/load round-trips: a loaded index ingests identically") {
     val (hist, batch) = split(sfDir)
-    val dir = Files.createTempDirectory("graft_dedup_store").toString
+    val dir = tempDir("graft_dedup_store").toString
     DedupStore.save(DedupStore.build(hist), dir)
     val loaded = DedupStore.load(spark, dir)
     assert(loaded.nDocs === hist.count())
@@ -62,7 +62,7 @@ class DedupStoreSpec extends SparkSpec {
         (0 until 100).map(k => (300L + k, (0 until 25).map(i => s"u${k}_$i").mkString(" "))) ++
         (0 until 15).map(r => (420L + r, repB)) ++  // history side of B
         (0 until 15).map(r => (900L + r, repB))     // batch side of B (thr = 823)
-    val tmp = Files.createTempDirectory("dedup_store_hot")
+    val tmp = tempDir("dedup_store_hot")
     val stage = tmp.resolve("stage")
     rows.toDF("doc_id", "text").coalesce(1).write.parquet(stage.toString)
     val part = Files.list(stage)
@@ -88,7 +88,7 @@ class DedupStoreSpec extends SparkSpec {
 
   test("save/load round-trips maxDocId") {
     val (hist, _) = split(sfDir)
-    val dir = Files.createTempDirectory("graft_dedup_store_meta").toString
+    val dir = tempDir("graft_dedup_store_meta").toString
     val built = DedupStore.build(hist)
     DedupStore.save(built, dir)
     assert(DedupStore.load(spark, dir).maxDocId === built.maxDocId)
@@ -97,7 +97,7 @@ class DedupStoreSpec extends SparkSpec {
 
   test("window index save/load round-trips: hashes and bloom match the in-memory build") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_window_idx").toString
+    val dir = tempDir("graft_window_idx").toString
     DedupStore.saveWindowIndex(docs, dir)
     val widx = DedupStore.loadWindowIndex(spark, dir)
     val mem = Dedup.windowTable(docs).select("h").distinct()

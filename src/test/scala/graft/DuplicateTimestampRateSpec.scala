@@ -20,7 +20,7 @@ class DuplicateTimestampRateSpec extends SparkSpec {
       (4L, 11L, "b", 1000000000L, 5.0),
       (5L, 11L, "b", 3000000000L, 9.0),
     ).toDF("event_id", "user_id", "event_type", "ts", "value")
-    val tmp = Files.createTempDirectory("graft_dupts")
+    val tmp = tempDir("graft_dupts")
     val stage = tmp.resolve("stage")
     df.coalesce(1).write.parquet(stage.toString)
     // the loaders expect a single file named events.parquet

@@ -26,7 +26,7 @@ class EmbedDupScaleSpec extends SparkSpec {
   test("above the cutoff the blocked path is a value-exact subset that keeps planted dups") {
     import spark.implicits._
     val n = graft.sim.Sim.EmbedExactCutoff.toInt + 50
-    val dir = java.nio.file.Files.createTempDirectory("embed_scale").toString
+    val dir = tempDir("embed_scale").toString
     // n random unit-ish vectors + 50 planted exact duplicates
     // (vec n+i ≡ vec i): identical vectors share an argmin cell, so
     // the blocked path must surface every planted pair at cos 1.0.
@@ -61,7 +61,7 @@ class EmbedDupScaleSpec extends SparkSpec {
     // and pins the floor: a deliberate nprobe/cell-count regression
     // must flip this red, not just dent a JSON nobody re-reads.
     val n = 20000
-    val dir = java.nio.file.Files.createTempDirectory("embed_clustered").toString
+    val dir = tempDir("embed_clustered").toString
     ClusteredCorpus.write(spark, n, dir)
 
     val blocked = graft.sim.Sim.embedDupPairs(spark, dir, 0.45)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -21,7 +20,7 @@ class EndToEndReferenceFlowSpec extends SparkSpec {
 
   test("payload file -> normalize -> flatten -> rollup -> ES bulk files") {
     // 1. a JSONL "scrape capture" file
-    val dir = Files.createTempDirectory("graft_e2e").toString
+    val dir = tempDir("graft_e2e").toString
     val lines = (0 until 6).map { i =>
       val doc = payload(i % 2, 1700000000L + i * 600, 10 + i)
       s"""{"payload":${ujsonEscape(doc)},"host":"host-${i % 2}","server_type":"KafkaBroker"}"""
@@ -46,7 +45,7 @@ class EndToEndReferenceFlowSpec extends SparkSpec {
     assert(rolled.agg(sum("n")).head().getLong(0) === 6)
 
     // 4. ship to the ES bulk sink; verify on-disk shape
-    val esDir = Files.createTempDirectory("graft_e2e_es").toString
+    val esDir = tempDir("graft_e2e_es").toString
     val docs = flat.withColumn("ts", timestamp_seconds($"created_date_time"))
       .withColumn("doc", to_json(struct($"mbean_name", $"attribute", $"value")))
     graft.sinks.Sinks.writeEsBulk(docs, "ts", "doc", "jmx", esDir)

@@ -42,7 +42,7 @@ class GenericApiSpec extends SparkSpec {
   }
 
   test("Pipeline.Config with a single sink enabled writes only that sink") {
-    val root = Files.createTempDirectory("graft_es_only")
+    val root = tempDir("graft_es_only")
     val in = Files.createDirectories(root.resolve("in"))
     Files.write(in.resolve("r.json"),
       """{"id":1,"ts":"2024-03-01T10:00:00Z","user_id":3,"v":5.0}""".getBytes("UTF-8"))
@@ -50,7 +50,7 @@ class GenericApiSpec extends SparkSpec {
     val q = graft.streaming.Pipeline.start(
       spark.readStream.schema("id LONG, ts TIMESTAMP, user_id LONG, v DOUBLE").json(in.toString),
       "ts", graft.streaming.Pipeline.Config(indexPrefix = "m", esDir = Some(esDir)),
-      Files.createTempDirectory("graft_es_only_ckpt").toString)
+      tempDir("graft_es_only_ckpt").toString)
     try q.processAllAvailable() finally q.stop()
     val written = Files.list(root)
     try assert(written.iterator().asScala.map(_.getFileName.toString).toSet === Set("in", "es"))

@@ -92,7 +92,7 @@ class IvfRecallSpec extends SparkSpec {
     // corpus where candidates/probe ≈ 25k — the regime that collapsed
     // the fixed constant — and demands the production floor.
     val n = 100000
-    val dir = java.nio.file.Files.createTempDirectory("adc_large").toString
+    val dir = tempDir("adc_large").toString
     ClusteredCorpus.write(spark, n, dir)
     val cand = 2L * n / 8
     val slAdaptive = graft.sim.Sim.adcShortlist(cand)

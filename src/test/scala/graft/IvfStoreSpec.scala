@@ -11,7 +11,7 @@ class IvfStoreSpec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
 
   test("IVF: save -> load -> search is identical to in-memory search") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store").toString
+    val dir = tempDir("ivf_store").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     graft.sim.IvfStore.save(idx, dir)
     val loaded = graft.sim.IvfStore.load(spark, dir)
@@ -64,7 +64,7 @@ class IvfStoreSpec extends SparkSpec {
       chained = graft.sim.IvfStore.add(chained,
         e.filter(col("vec_id") >= cut && col("vec_id") % 3 === b))
     assert(unionCount(chained.assigned) === 3)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_compact").toString
+    val dir = tempDir("ivf_compact").toString
     val compacted = graft.sim.IvfStore.compact(chained, dir)
     // depth is constant after compaction: no unions survive, and the
     // plan is the same single-scan shape a once-compacted 1-add index
@@ -72,7 +72,7 @@ class IvfStoreSpec extends SparkSpec {
     assert(unionCount(compacted.assigned) === 0)
     val once = graft.sim.IvfStore.compact(
       graft.sim.IvfStore.add(base, e.filter(col("vec_id") >= cut)),
-      java.nio.file.Files.createTempDirectory("ivf_compact1").toString)
+      tempDir("ivf_compact1").toString)
     assert(compacted.assigned.queryExecution.analyzed.getClass ===
       once.assigned.queryExecution.analyzed.getClass)
     // search over the compacted index ≡ search over the union chain
@@ -115,7 +115,7 @@ class IvfStoreSpec extends SparkSpec {
 
   test("meta: save persists the trigger baselines; loadMeta needs no corpus agg") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("ivf_meta").toString
+    val dir = tempDir("ivf_meta").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     graft.sim.IvfStore.save(idx, dir)
     val meta = graft.sim.IvfStore.loadMeta(spark, dir)
@@ -143,7 +143,7 @@ class IvfStoreSpec extends SparkSpec {
           lit(scale) * (pmod(xxhash64(col("id"), i, lit(salt)), lit(2001L))
             .cast("double") - 1000.0) / 1000.0).as("v"))
     val n = 4000L
-    val dir = java.nio.file.Files.createTempDirectory("ivf_same_dir").toString
+    val dir = tempDir("ivf_same_dir").toString
     // publish a serving index, then BOOT FROM THE ARTIFACT — the
     // natural long-lived-serving pattern the r12 verdict found broken:
     // the retrained assignment plan lazily reads dir/assigned, and an
@@ -173,7 +173,7 @@ class IvfStoreSpec extends SparkSpec {
         transform(sequence(lit(0), lit(15)), i =>
           (pmod(xxhash64(col("id"), i, lit(salt)), lit(2001L))
             .cast("double") - 1000.0) / 1000.0).as("v"))
-    val dir = java.nio.file.Files.createTempDirectory("ivf_layout").toString
+    val dir = tempDir("ivf_layout").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     // publish PARTITIONED, then run both maintenance ops against the
     // same dir: the first compaction of a cid-partitioned serving
@@ -216,7 +216,7 @@ class IvfStoreSpec extends SparkSpec {
           lit(scale) * (pmod(xxhash64(col("id"), i, lit(salt)), lit(2001L))
             .cast("double") - 1000.0) / 1000.0).as("v"))
     val n = 4000L
-    val dir = java.nio.file.Files.createTempDirectory("ivf_health").toString
+    val dir = tempDir("ivf_health").toString
     graft.sim.IvfStore.save(graft.sim.IvfStore.retrain(uvecs(0, n, "base", 1.0)), dir)
     val idx = graft.sim.IvfStore.load(spark, dir)
     val meta = graft.sim.IvfStore.loadMeta(spark, dir)
@@ -237,7 +237,7 @@ class IvfStoreSpec extends SparkSpec {
 
   test("versioned publish: a crash mid-save leaves readers on the OLD complete version") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("ivf_crash").toString
+    val dir = tempDir("ivf_crash").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     graft.sim.IvfStore.save(idx, dir)
     val v0Meta = graft.sim.IvfStore.loadMeta(spark, dir)
@@ -263,7 +263,7 @@ class IvfStoreSpec extends SparkSpec {
 
   test("save aborts when a concurrent publisher FULLY published v{next} (marker present)") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("ivf_race").toString
+    val dir = tempDir("ivf_race").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     graft.sim.IvfStore.save(idx, dir) // v0 published
     val winner = graft.sim.Sim.IvfIndex(
@@ -291,8 +291,8 @@ class IvfStoreSpec extends SparkSpec {
   }
 
   test("partitioned publish: load is prunable; search matches flat and prunes the scan") {
-    val flatDir = java.nio.file.Files.createTempDirectory("ivf_flat").toString
-    val partDir = java.nio.file.Files.createTempDirectory("ivf_part").toString
+    val flatDir = tempDir("ivf_flat").toString
+    val partDir = tempDir("ivf_part").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     graft.sim.IvfStore.save(idx, flatDir)
     graft.sim.IvfStore.save(idx, partDir, partitioned = true)
@@ -330,8 +330,8 @@ class IvfStoreSpec extends SparkSpec {
 
   test("map-side partitioned publish (exchange=false): same pruning, same results") {
     import org.apache.spark.sql.functions.col
-    val exDir = java.nio.file.Files.createTempDirectory("ivf_part_ex").toString
-    val mapDir = java.nio.file.Files.createTempDirectory("ivf_part_map").toString
+    val exDir = tempDir("ivf_part_ex").toString
+    val mapDir = tempDir("ivf_part_map").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     graft.sim.IvfStore.save(idx, exDir, partitioned = true)
     graft.sim.IvfStore.save(idx, mapDir, partitioned = true, exchange = false)
@@ -361,7 +361,7 @@ class IvfStoreSpec extends SparkSpec {
     // semantic no-op that becomes static partition pruning on the
     // refine scan
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("ivf_adc_part").toString
+    val dir = tempDir("ivf_adc_part").toString
     val idx0 = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     graft.sim.IvfStore.save(idx0, dir, partitioned = true)
     val part = graft.sim.IvfStore.load(spark, dir)
@@ -385,7 +385,7 @@ class IvfStoreSpec extends SparkSpec {
   }
 
   test("IVF-ADC: save -> load -> search is identical to in-memory search") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_pq").toString
+    val dir = tempDir("ivf_store_pq").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
     val books = graft.sim.Sim.pqBooks(spark, sfDir)
     val coded = graft.sim.Sim.ivfCoded(spark, sfDir)

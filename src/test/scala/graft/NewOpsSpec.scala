@@ -33,7 +33,7 @@ class NewOpsSpec extends SparkSpec {
       (1L, "contact bob@example.com or 10.0.0.1 or 555-123-4567 now"),
       (2L, "no pii here at all"),
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("pii")
+    val tmp = tempDir("pii")
     val stage = tmp.resolve("stage")
     df.coalesce(1).write.parquet(stage.toString)
     val part = java.nio.file.Files.list(stage)
@@ -100,7 +100,7 @@ class NewOpsSpec extends SparkSpec {
       (2L, base.substring(0, 60)), // truncated copy (shares 50-char prefix)
       (3L, "completely different text " * 10),
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("prefix")
+    val tmp = tempDir("prefix")
     val stage = tmp.resolve("stage")
     df.coalesce(1).write.parquet(stage.toString)
     val part = java.nio.file.Files.list(stage)
@@ -183,7 +183,7 @@ class NewOpsSpec extends SparkSpec {
     val payload = ("lorem ipsum dolor sit amet " * 40).trim
     val df = Seq((1L, payload), (2L, payload), (3L, "entirely different body"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("cd")
+    val tmp = tempDir("cd")
     val stage = tmp.resolve("stage")
     df.coalesce(1).write.parquet(stage.toString)
     val part = java.nio.file.Files.list(stage)
@@ -257,7 +257,7 @@ class NewOpsSpec extends SparkSpec {
       (1L, base),                            // subset doc
       (2L, base + " lambda mu nu xi omicron pi rho sigma tau upsilon"),
       (3L, "totally unrelated words here in this document body text")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("cont")
+    val tmp = tempDir("cont")
     val stage = tmp.resolve("stage")
     df.coalesce(1).write.parquet(stage.toString)
     val part = java.nio.file.Files.list(stage)

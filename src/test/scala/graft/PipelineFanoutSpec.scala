@@ -76,7 +76,7 @@ class PipelineFanoutSpec extends SparkSpec {
   }
 
   test("two sinks read each micro-batch once, inside the batch's job properties") {
-    val root = Files.createTempDirectory("fanout_once")
+    val root = tempDir("fanout_once")
     val in = Files.createDirectories(root.resolve("in"))
     val n = 2000
     writeFiles(in, files = 1, rows = n)
@@ -111,7 +111,7 @@ class PipelineFanoutSpec extends SparkSpec {
   }
 
   test("a failing sink fails the batch and releases it; a restart writes both sinks") {
-    val root = Files.createTempDirectory("fanout_fail")
+    val root = tempDir("fanout_fail")
     val in = Files.createDirectories(root.resolve("in"))
     val n = 50
     writeFiles(in, files = 1, rows = n)
@@ -135,7 +135,7 @@ class PipelineFanoutSpec extends SparkSpec {
   }
 
   test("stop() during a two-sink write returns only after both sink threads ended") {
-    val root = Files.createTempDirectory("fanout_stop")
+    val root = tempDir("fanout_stop")
     val in = Files.createDirectories(root.resolve("in"))
     writeFiles(in, files = 1, rows = 20)
     def sinkThreads(): Seq[Thread] =
@@ -154,8 +154,8 @@ class PipelineFanoutSpec extends SparkSpec {
   }
 
   test("restart after a crash between the two sinks equals a clean run") {
-    val clean = Files.createTempDirectory("fanout_clean")
-    val crash = Files.createTempDirectory("fanout_crash")
+    val clean = tempDir("fanout_clean")
+    val crash = tempDir("fanout_crash")
     Seq(clean, crash).foreach(r => writeFiles(Files.createDirectories(r.resolve("in")), 3, 40))
     def run(root: Path): Unit = {
       val q = Pipeline.start(source(root.resolve("in")), "ts", bothSinks(root),

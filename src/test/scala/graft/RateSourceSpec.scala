@@ -15,7 +15,7 @@ class RateSourceSpec extends SparkSpec {
     val rolled = graft.metrics.Transforms.hourlyRollup(
       graft.streaming.Streaming.rateEvents(spark, rowsPerSecond = 5000))
     val name = "graft_rate_replay"
-    val ckpt = java.nio.file.Files.createTempDirectory("rate_ckpt").toString
+    val ckpt = tempDir("rate_ckpt").toString
     val q = rolled.writeStream.format("memory").queryName(name)
       .outputMode("complete").option("checkpointLocation", ckpt).start()
     try {

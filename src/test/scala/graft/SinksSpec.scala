@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -13,7 +12,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("ES bulk sink: action+doc line pairs in date-rotated index dirs") {
-    val out = Files.createTempDirectory("graft_es_spec").toString
+    val out = tempDir("graft_es_spec").toString
     val df = Seq(
       (1L, new Timestamp(86400L * 1000), """{"m":1}"""),
       (2L, new Timestamp(86400L * 2000), """{"m":2}"""),
@@ -69,7 +68,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("Kafka JSONL wire frame byte-equals the JSONL sink's lines, partition-for-partition") {
-    val out = Files.createTempDirectory("graft_kwire_spec").toString
+    val out = tempDir("graft_kwire_spec").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5)).toDF("k", "name", "v")
     graft.sinks.Sinks.writeKafkaJsonl(df, "k", out, numPartitions = 4)
     val wire = graft.sinks.Sinks.kafkaJsonlWireFrame(df, "k", "t2", numPartitions = 4)
@@ -85,7 +84,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("Kafka JSONL sink: records land key-partitioned, JSON round-trips") {
-    val out = Files.createTempDirectory("graft_kafka_spec").toString
+    val out = tempDir("graft_kafka_spec").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "name", "v")
     graft.sinks.Sinks.writeKafkaJsonl(df, "k", out, numPartitions = 4)
     val back = spark.read.json(spark.read.text(out).select("value").as[String])

@@ -31,7 +31,7 @@ class SocketSourceSpec extends SparkSpec {
       graft.streaming.Streaming.eventsSource(spark,
         graft.streaming.Streaming.SourceKind.Socket(server.getLocalPort)))
     val name = "graft_socket_replay"
-    val ckpt = java.nio.file.Files.createTempDirectory("socket_ckpt").toString
+    val ckpt = tempDir("socket_ckpt").toString
     val q = rolled.writeStream.format("memory").queryName(name)
       .outputMode("complete").option("checkpointLocation", ckpt).start()
     try {

@@ -23,8 +23,8 @@ class StateRescaleSpec extends SparkSpec {
   private def splitSource(): (String, Path) = {
     val ev = graft.sources.Tables.events(spark, sfDir)
     val mid = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5)")).head().getLong(0)
-    val srcDir = Files.createTempDirectory("graft_rescale_src")
-    val staging = Files.createTempDirectory("graft_rescale_stage")
+    val srcDir = tempDir("graft_rescale_src")
+    val staging = tempDir("graft_rescale_stage")
     def dump(df: DataFrame, name: String): Path = {
       val tmp = s"$staging/$name"
       df.coalesce(1).write.parquet(tmp)
@@ -52,11 +52,11 @@ class StateRescaleSpec extends SparkSpec {
   private def twoPhase(dir: String, second: Path, mkStream: DataFrame => DataFrame,
                        mode: OutputMode, parts1: Int, parts2: Int,
                        tag: String): Seq[String] = {
-    val ckpt = Files.createTempDirectory(s"graft_rescale_ckpt_$tag").toString
+    val ckpt = tempDir(s"graft_rescale_ckpt_$tag").toString
     // append phases write to a recoverable parquet sink (memory-sink
     // append can't restart from a checkpoint); complete phases
     // materialize to a memory table.
-    val outDir = Files.createTempDirectory(s"graft_rescale_out_$tag").toString
+    val outDir = tempDir(s"graft_rescale_out_$tag").toString
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     def phase(n: Int, name: String): Seq[String] =

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -12,9 +11,9 @@ import org.apache.spark.sql.functions._
 class StreamReplaySpec extends SparkSpec {
 
   test("Pipeline replay into the same sink dir produces identical output, no dupes") {
-    val esDir = Files.createTempDirectory("replay_es").toString
+    val esDir = tempDir("replay_es").toString
     def runOnce(): Unit = {
-      val ckpt = Files.createTempDirectory("replay_ckpt").toString // fresh = full replay
+      val ckpt = tempDir("replay_ckpt").toString // fresh = full replay
       val src = graft.sources.Tables.normalizeEventsTs(spark.readStream
         .schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
         .option("pathGlobFilter", "events.parquet").parquet(sfDir))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -18,7 +17,7 @@ class TemporalJoinSpec extends SparkSpec {
   // user 2: clicks at t-3600s (excluded, boundary is strict >),
   //         t-3599s and t (both included) around purchase@7200s
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_tj").toString
+    val d = tempDir("graft_tj").toString
     Seq(
       (1L, us(10), 1L, "view", 1.0, "{}"),
       (2L, us(10), 1L, "purchase", 2.0, "{}"),
