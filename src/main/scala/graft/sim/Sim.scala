@@ -386,7 +386,7 @@ object Sim {
     * Publishing is once-per-corpus by construction, so the serving
     * query's repeated runs pay a 1-row meta read, not an index write.
     */
-  private val pubMemo = scala.collection.mutable.Map[(String, Int, Int, Boolean),
+  private val pubMemo = scala.collection.mutable.Map[(String, Int, Int),
     (SparkSession, java.util.concurrent.CompletableFuture[String])]()
   graft.Caching.onReleaseAll(() => pubMemo.synchronized {
     // a memo entry dropped without deleting its dir strands a full
@@ -408,9 +408,8 @@ object Sim {
     f.whenComplete((dir, err) =>
       if (err == null && dir != null) graft.Caching.deleteRecursively(dir))
 
-  def publishedIndexDir(s: SparkSession, d: String, k: Int, iters: Int,
-                        partitioned: Boolean = false): String = {
-    val key = (d, k, iters, partitioned)
+  def publishedIndexDir(s: SparkSession, d: String, k: Int, iters: Int): String = {
+    val key = (d, k, iters)
     // the lock only installs/reads the per-key future — the expensive
     // build+save runs OUTSIDE it (a second corpus' publish must not
     // serialize behind this one); concurrent callers of the SAME key
@@ -432,7 +431,7 @@ object Sim {
     if (isBuilder) {
       try {
         val dir = graft.Caching.sessionTempDir("graft_ivf_pub")
-        IvfStore.save(ivfIndex(s, d, k, iters), dir, partitioned)
+        IvfStore.save(ivfIndex(s, d, k, iters), dir)
         fut.complete(dir)
       } catch {
         case t: Throwable =>
@@ -721,6 +720,73 @@ object Sim {
       .orderBy("probe_id", "rank")
   }
 
+  /** Exact brute-force top-3 per probe WITHOUT shuffling the
+    * candidate volume: the window form (row_number over partitionBy
+    * probe_id) sort-exchanges recallProbes·n rows — 5·10⁹ rows
+    * (~100+ GB of spill) at 100M vectors, which is what killed the
+    * first r15 100M run on disk. Candidates never need to move: each
+    * scan partition keeps a bounded best-3 per probe
+    * (≤ recallProbes·3 tuples of state), and the global merge
+    * aggregates ≤ partitions·probes·3 rows. Ordering
+    * (cs DESC, neighbor_id ASC) matches the window's row_number
+    * ordering exactly, so the selected set is identical
+    * (window-equivalence pinned in AnnBruteTopKSpec).
+    *
+    * Undefined cosines are EXCLUDED before either stage: a zero-norm
+    * corpus vector yields NULL cs (gfunctions.cosine's safeDiv),
+    * which would NPE the keeper's getDouble, and a NaN (non-finite
+    * vector entries) sorts inconsistently across the three orderings
+    * in play — the keeper's `<` drops it, the merge's negated
+    * sort_array puts it last, and the raw window form ranks it FIRST
+    * (Spark orders NaN greatest in a DESC sort). A recall denominator
+    * must never contain an undefined similarity; AnnBruteTopKSpec
+    * pins equivalence to the filtered window form.
+    */
+  private[graft] def bruteTop3(probesR: DataFrame, ev: DataFrame): DataFrame = {
+    val cand = broadcast(probesR)
+      .join(ev.select(col("vec_id").as("neighbor_id"), col("v")),
+        col("neighbor_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("neighbor_id"),
+        graft.gfunctions.cosine(col("pv"), col("v")).as("cs"))
+      .filter(col("cs").isNotNull && !isnan(col("cs")))
+    val partialSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("probe_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("neighbor_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("cs",
+        org.apache.spark.sql.types.DoubleType)))
+    val partial = cand.mapPartitions { it =>
+      val best = scala.collection.mutable.Map[Long,
+        scala.collection.mutable.ArrayBuffer[(Long, Double)]]()
+      def worse(a: (Long, Double), b: (Long, Double)): Boolean =
+        a._2 < b._2 || (a._2 == b._2 && a._1 > b._1)
+      for (r <- it) {
+        val p = r.getLong(0); val nb = r.getLong(1); val c = r.getDouble(2)
+        val buf = best.getOrElseUpdate(p,
+          new scala.collection.mutable.ArrayBuffer[(Long, Double)](4))
+        if (buf.size < 3) buf += ((nb, c))
+        else {
+          var wi = 0
+          var i = 1
+          while (i < 3) { if (worse(buf(i), buf(wi))) wi = i; i += 1 }
+          if (worse(buf(wi), (nb, c))) buf(wi) = ((nb, c))
+        }
+      }
+      best.iterator.flatMap { case (p, buf) =>
+        buf.iterator.map { case (nb, c) => org.apache.spark.sql.Row(p, nb, c) }
+      }
+    }(org.apache.spark.sql.Encoders.row(partialSchema))
+    partial
+      // negated cs: sort_array's ascending struct order then IS
+      // (cs DESC, neighbor_id ASC) — row_number's ordering
+      .groupBy("probe_id")
+      .agg(slice(sort_array(collect_list(struct((-col("cs")).as("ncs"),
+        col("neighbor_id")))), 1, 3).as("top"))
+      .select(col("probe_id"), explode(col("top")).as("t"))
+      .select(col("probe_id"), col("t.neighbor_id").as("neighbor_id"))
+  }
+
   /** s_filtered_ann: metadata-FILTERED vector search — the
     * vector-database shape where a query carries a structured
     * predicate ("same shard/category/tenant as me") and only matching
@@ -921,21 +987,13 @@ object Sim {
     // candidates the r11 sweep showed cand/12 already saturating
     // (1.000 / 1.000 / 0.987 at 2M/5M/20M vectors), so the knee point
     // only moves the regime the sweep never covered.
+    val divisor = if (candidatesPerProbe >= (1L << 20)) 8L else 12L
     // clamp BEFORE narrowing: candidates/probe beyond ~17B would
     // wrap toInt negative and the arank cut would silently return
     // zero rows instead of a full re-rank
     math.min(Int.MaxValue.toLong,
-      math.max(AdcShortlist.toLong,
-        candidatesPerProbe / adcShortlistDivisor(candidatesPerProbe))).toInt
+      math.max(AdcShortlist.toLong, candidatesPerProbe / divisor)).toInt
   }
-
-  /** The knee-selected divisor — exposed so probe artifacts
-    * self-describe the EXACT rule that produced their shortlist
-    * (AnnProbe's shortlist_rule field) instead of a hardcoded label
-    * that could drift from the code.
-    */
-  private[graft] def adcShortlistDivisor(candidatesPerProbe: Long): Long =
-    if (candidatesPerProbe >= (1L << 20)) 8L else 12L
 
   /** Oracle-gated runs (Verify sets graft.assertFixedCap) compare
     * against SQL with a literal `arank <= 50` cut — a shortlist that
@@ -1264,30 +1322,15 @@ object Sim {
   }
 
   /** The same IVF-ADC search over an arbitrary (probe_id, pv) probe
-    * frame — the batch-serving entry point, and what the adaptive-k
-    * ANN regime probe drives: `e` supplies true vectors for the
-    * re-rank fetch, `coded` is the PQ-coded corpus under the SAME
-    * index whose centroids are passed as `cents`.
-    */
-  /** `fetchByBroadcast`: force the exact-re-rank fetch join to
-    * broadcast the SLIM shortlist (two longs per row) instead of
-    * letting AQE choose. The caller decides from its known geometry
-    * (probes × shortlistN × 16 B): when that bound is driver-sized,
-    * broadcasting the query set means the corpus-with-vectors side
-    * NEVER exchanges — at the 100M decade probe AQE's sort-merge
-    * choice exchanged the full 52 GB index for a 230 MB shortlist and
-    * died on local disk. This is the refine-from-storage deploy rule:
-    * move the bounded query set to where the vectors live, never the
-    * store to the query set. Default false keeps gate-scale plans
-    * byte-identical (the ≤ AdcShortlist hint below already covers
-    * them).
+    * frame — the batch-serving entry point: `e` supplies true vectors
+    * for the re-rank fetch, `coded` is the PQ-coded corpus under the
+    * SAME index whose centroids are passed as `cents`.
     */
   def searchIvfAdcProbes(e: DataFrame, probeFrame: DataFrame,
                          cents: Seq[(Long, Seq[Double])],
                          books: Seq[Seq[(Long, Seq[Double])]],
                          coded: DataFrame, nprobe: Int = 2,
-                         shortlistN: Int = AdcShortlist,
-                         fetchByBroadcast: Boolean = false): DataFrame = {
+                         shortlistN: Int = AdcShortlist): DataFrame = {
     def sub(c: Column, j: Int): Column = slice(c, j * PqSubLen + 1, PqSubLen)
     // per-probe ADC tables computed ONCE (before the cell explode
     // duplicates the probe row per cell), behind the same
@@ -1322,9 +1365,7 @@ object Sim {
       // probe frame by broadcast after the corpus fetch; and beyond
       // the gate regime the fetch join drops the hint so AQE picks
       // the strategy from the shortlist's runtime size.
-      val fetch =
-        if (fetchByBroadcast || shortlistN <= AdcShortlist) broadcast(shortlist)
-        else shortlist
+      val fetch = if (shortlistN <= AdcShortlist) broadcast(shortlist) else shortlist
       // the pv re-attach carries NO broadcast hint: this entry point
       // takes an arbitrary probe frame, and a forced broadcast would
       // pin probes×512 B however large the batch — AQE broadcasts the

@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Capture-hygiene helpers shared by `Bench`, `AnnProbe`,
+/** Capture-hygiene helpers shared by `Bench`,
   * `StreamThroughputProbe` and perfbench's `Main`.
   *
   * The r10 verdict flagged several headline captures taken at host

@@ -22,7 +22,7 @@ object StateProbe {
     val spark = graft.GraftSession.local(cpus)
     val src = graft.streaming.Streaming.streamEvents(spark, sfDir)
     val sessions = graft.streaming.Streaming.sessionStream(src)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_probe_ckpt").toString
+    val ckpt = graft.Caching.scratchTempDir("graft_probe_ckpt")
     val t0 = System.nanoTime()
     // noop sink, NOT memory: the probe reads the state operator's own
     // metrics, and a Complete-mode memory sink would ship the full
@@ -82,6 +82,7 @@ object StateProbe {
     outFile.foreach(p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p), line + "\n"))
     println(line)
+    graft.Caching.releaseTransient()
     spark.stop()
   }
 }

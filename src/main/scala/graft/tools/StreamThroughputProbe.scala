@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 
 /** Sustained streaming throughput — the one dimension of the
   * streaming family the single-batch harness artifacts never measure
@@ -19,13 +19,15 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigg
   * `StreamThroughputProbe <query> <sfDir> <rowsPerSec> <nBatches> [outFile]`
   *
   *   query ∈ st_pipeline | st_sessions | st_dedup_ingest
+  *     st_pipeline     — the m1→m2 hourlyRollup chain, Update mode
+  *     st_sessions     — session windows over session-shaped events, Append
+  *     st_dedup_ingest — the DedupStore bloom-ingest chain (window hash →
+  *                       bloom probe → exact confirm → span stats) per batch
   *   sfDir  — only st_dedup_ingest reads it (its offline corpus index)
-  *   env    — SPARK_GRAFT_ROCKSDB=1 flips the state provider,
-  *            SPARK_GRAFT_TRIGGER_MS overrides the 1000 ms trigger
+  *   env    — SPARK_GRAFT_ROCKSDB=1 flips the state provider
   *
   * Method: the RATE source drives the query's own transform chain
-  * (hourlyRollup / sessionStream / the DedupStore bloom-ingest
-  * foreachBatch) into a noop sink under a ProcessingTime trigger; a
+  * into a noop sink under a 1000 ms ProcessingTime trigger; a
   * listener records every StreamingQueryProgress. The first
   * `Warmup` batches are excluded from the sustained number (state
   * store open + JIT live there), then:
@@ -36,12 +38,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigg
   *                            max(2 × p50, trigger) AND no batch-time
   *                            growth trend. The old trigger-absolute
   *                            criterion (p95 ≤ trigger) survives as
-  *                            `stable_strict`; it reads false on EVERY
-  *                            healthy multi-second-batch capture (the
-  *                            r16 decade artifacts: HEALTH60K p95
-  *                            1091 ms at 99.2% of rate; ANNSERVE 10 s
-  *                            batches at rate 1 by design), i.e. it
-  *                            carries no information in that regime.
+  *                            `stable_strict`; it reads false on every
+  *                            healthy multi-second-batch capture, i.e.
+  *                            it carries no information in that regime.
   *   state trajectory       = (first, mid, last) store rows/bytes —
   *                            flat ⇒ eviction keeps up with ingest.
   *
@@ -54,6 +53,18 @@ object StreamThroughputProbe {
 
   /** Batches excluded from the head of the sustained window. */
   val Warmup = 10
+
+  private val TriggerMs = 1000L
+
+  /** Rate-source partitions: the map-side parallelism before the
+    * first shuffle. Fixed so every committed artifact stays comparable.
+    */
+  private val RateParts = "4"
+
+  private val Modes = Seq("st_pipeline", "st_sessions", "st_dedup_ingest")
+
+  private val Usage = s"usage: StreamThroughputProbe <${Modes.mkString("|")}> " +
+    "<sfDir> <rowsPerSec> <nBatches> [outFile]"
 
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -95,49 +106,9 @@ object StreamThroughputProbe {
     (stable, sustainedFrac, growth)
   }
 
-  /** Rate-source partition count. The source partitions ARE the
-    * map-side compute parallelism for everything before the first
-    * shuffle — at st_index_health's k=1414 assignment (~90k MACs/row)
-    * the historical fixed 4 caps the probe at 4 cores (~33k rows/s
-    * measured), which is a probe-tool artifact, not a serving limit:
-    * a real ingest sizes input partitions to the per-row work.
-    * SPARK_GRAFT_RATE_PARTS overrides; default stays 4 so earlier
-    * low-work-per-row artifacts remain comparable.
-    */
-  private val RateParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_RATE_PARTS", "4")
-
   private final case class BatchObs(inputRows: Long, processedPerSec: Double,
                                     triggerMs: Long, stateRows: Long,
                                     stateBytes: Long, atNanos: Long)
-
-  /** The (timestamp, value) source behind the vector probes
-    * (st_index_health / st_ann). Default: the rate source at
-    * `rowsPerSecond`. With SPARK_GRAFT_ROWS_PER_BATCH set, the
-    * rate-micro-batch source instead: EXACTLY that many rows per
-    * trigger, however long the previous batch took. That is the
-    * non-spiraling pacing for serves whose per-probe cost × rate > 1
-    * — under the wall-clock rate source an overrun batch accumulates
-    * rate × overrun extra input and durations grow without bound
-    * (measured 59 s → 105 s batches at rate 75 in r16), so a fixed
-    * per-batch latency DISTRIBUTION is not measurable there. With
-    * fixed batches there is no arrival rate to keep: `sustained_frac`
-    * is definitionally the achieved throughput over itself (recorded
-    * 1.0, flagged via "paced":"per_batch") and `stable` reduces to
-    * the tail + growth terms.
-    */
-  private def valueStream(s: SparkSession, rowsPerSecond: Int,
-                          rowsPerBatch: Option[Int]): DataFrame =
-    rowsPerBatch match {
-      case Some(n) =>
-        s.readStream.format("rate-micro-batch")
-          .option("rowsPerBatch", n.toString)
-          .option("numPartitions", RateParts).load()
-      case None =>
-        s.readStream.format("rate")
-          .option("rowsPerSecond", rowsPerSecond.toString)
-          .option("numPartitions", RateParts).load()
-    }
 
   /** Session-regime event shaping for the rate source. The pipeline
     * shaping (Streaming.rateEvents: 61 s/row clock, 50 users) spaces
@@ -185,41 +156,67 @@ object StreamThroughputProbe {
         when(pmod(col("gid"), lit(16L)) === 0, dupPick).otherwise(fresh).as("text"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val query = args(0)
-    val sfDir = args(1)
-    val rate = args(2).toInt
-    val nBatches = args(3).toInt
-    val outFile = if (args.length > 4) Some(args(4)) else None
-    val triggerMs = sys.env.get("SPARK_GRAFT_TRIGGER_MS").map(_.toLong).getOrElse(1000L)
-    val loadStart = Capture.loadAvg()
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = graft.GraftSession.local(cpus)
-    // one state store per shuffle partition — same harness sizing as
-    // Streaming.runToTable (store open/commit dominates small batches)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+  /** Start `query`'s chain into a noop sink. Returns the running query
+    * and the frame it cached (st_dedup_ingest's corpus index), which
+    * the caller unpersists once the query stops.
+    */
+  private def start(spark: SparkSession, query: String, sfDir: String, rate: Int,
+                    ckpt: String): (StreamingQuery, Option[DataFrame]) = {
+    val trigger = Trigger.ProcessingTime(TriggerMs)
+    query match {
+      case "st_pipeline" =>
+        // the m1→m2 rollup chain over the rate source (the proven
+        // source-parameterization path, RateSourceSpec), Update mode
+        (graft.metrics.Transforms.hourlyRollup(
+            graft.streaming.Streaming.rateEvents(spark, rate)
+              .withWatermark("ts", "2 hours"))
+          .writeStream.format("noop").outputMode(OutputMode.Update())
+          .option("checkpointLocation", ckpt).trigger(trigger).start(), None)
+      case "st_sessions" =>
+        // session windows support Append (emit on watermark close) or
+        // Complete, not Update; Append IS the production shape for an
+        // unbounded stream — each session is emitted exactly once
+        (graft.streaming.Streaming.sessionStream(sessionRateEvents(spark, rate))
+          .writeStream.format("noop").outputMode(OutputMode.Append())
+          .option("checkpointLocation", ckpt).trigger(trigger).start(), None)
+      case "st_dedup_ingest" =>
+        import graft.dedup.{Dedup, DedupStore}
+        val docs = graft.sources.Tables.documents(spark, sfDir)
+        val idxDir = graft.Caching.scratchTempDir("graft_tput_idx")
+        DedupStore.saveWindowIndex(docs, idxDir)
+        val widx = DedupStore.loadWindowIndex(spark, idxDir)
+        val bloom = widx.bloom
+        // the plain cached corpus: Spark broadcasts it into the
+        // confirm join per batch
+        val corpus = widx.hashes
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        corpus.count() // build the index OUTSIDE the measured window
+        val texts = docs.orderBy("doc_id").limit(64)
+          .select("text").collect().map(_.getString(0))
+        val q = rateDocs(spark, rate, texts).writeStream
+          .option("checkpointLocation", ckpt).trigger(trigger)
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            Dedup.spanStats(
+              Dedup.bloomProbe(Dedup.windowTable(b), bloom)
+                .join(corpus, Seq("h"), "left_semi"))
+              .write.format("noop").mode("overwrite").save()
+          }
+          .start()
+        (q, Some(corpus))
+    }
+  }
 
+  /** Drive `query` at `rate` rows/s until `nBatches` data batches have
+    * completed and return the probe's JSON line. The session's shuffle
+    * width is restored, and the checkpoint and index dirs released,
+    * before this returns.
+    */
+  def run(spark: SparkSession, query: String, sfDir: String, rate: Int,
+          nBatches: Int): String = {
+    if (!Modes.contains(query))
+      throw new IllegalArgumentException(s"unknown probe query: $query; $Usage")
+    val loadStart = Capture.loadAvg()
     val obs = new ArrayBuffer[BatchObs]
-    // st_ann records which serving layout the deploy rule (or its env
-    // override) picked, so the capture artifact is self-describing
-    var servedPartitioned: Option[Boolean] = None
-    // st_ann ADC-serving extras (shortlist rule fields) and the
-    // deferred served-recall evaluation — the eval MUST run after the
-    // stream stops (it drives the same serve stack over a probe
-    // sample, which would contend with the measured batches)
-    var annExtra = ""
-    var annRecall: Option[() => String] = None
-    // fixed rows-per-batch pacing — see [[valueStream]]; applies to
-    // the vector probes (st_index_health / st_ann), whose serve cost
-    // is per-probe. The event-shaped regimes (st_pipeline/st_sessions/
-    // st_dedup_ingest) stay wall-clock-rated: their semantics (session
-    // gaps, watermarks, dup mix) are functions of arrival TIME.
-    val rowsPerBatch = sys.env.get("SPARK_GRAFT_ROWS_PER_BATCH").map(_.toInt)
-    // multi-second-batch serves pay tens of seconds per excluded
-    // batch — the default 10-batch warmup is a rate-regime sizing
-    val warmup = math.max(1,
-      sys.env.get("SPARK_GRAFT_TPUT_WARMUP").map(_.toInt).getOrElse(Warmup))
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
@@ -237,346 +234,75 @@ object StreamThroughputProbe {
         }
       }
     }
+    // one state store per shuffle partition — same harness sizing as
+    // Streaming.runToTable (store open/commit dominates small batches)
+    val partsKey = "spark.sql.shuffle.partitions"
+    val prevParts = spark.conf.get(partsKey)
+    spark.conf.set(partsKey, "8")
     spark.streams.addListener(listener)
-
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tput_ckpt").toString
-    val trigger = Trigger.ProcessingTime(triggerMs)
-
-    val q = query match {
-      case "st_pipeline" =>
-        // the m1→m2 rollup chain over the rate source (the proven
-        // source-parameterization path, RateSourceSpec), Update mode
-        graft.metrics.Transforms.hourlyRollup(
-            graft.streaming.Streaming.rateEvents(spark, rate)
-              .withWatermark("ts", "2 hours"))
-          .writeStream.format("noop").outputMode(OutputMode.Update())
-          .option("checkpointLocation", ckpt).trigger(trigger).start()
-      case "st_sessions" =>
-        // session windows support Append (emit on watermark close) or
-        // Complete, not Update; Append IS the production shape for an
-        // unbounded stream — each session is emitted exactly once
-        graft.streaming.Streaming.sessionStream(sessionRateEvents(spark, rate))
-          .writeStream.format("noop").outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt).trigger(trigger).start()
-      case "st_dedup_ingest" =>
-        import graft.dedup.{Dedup, DedupStore}
-        val docs = graft.sources.Tables.documents(spark, sfDir)
-        val idxDir = java.nio.file.Files.createTempDirectory("graft_tput_idx").toString
-        DedupStore.saveWindowIndex(docs, idxDir)
-        val widx = DedupStore.loadWindowIndex(spark, idxDir)
-        // SPARK_GRAFT_INGEST_CONFIRM picks the confirm-join physical
-        // shape for the A/B (r13 knee attribution follow-up):
-        //   bcast     — plain cached corpus; Spark broadcasts it per
-        //               batch (rebuilds the HashedRelation every
-        //               micro-batch — the r12-shipped shape)
-        //   partsort  — corpus cached h-partitioned + sorted, join
-        //               hinted merge: per batch only the bloom
-        //               survivors shuffle+sort, the corpus side
-        //               streams from cache (the deploy shape — a
-        //               stored index is h-partitioned)
-        val confirmShape = sys.env.getOrElse("SPARK_GRAFT_INGEST_CONFIRM", "bcast")
-        val corpus = (confirmShape match {
-          case "partsort" => widx.hashes.repartition(col("h")).sortWithinPartitions("h")
-          case _ => widx.hashes
-        }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        corpus.count() // build the index OUTSIDE the measured window
-        val corpusJ = if (confirmShape == "partsort") corpus.hint("merge") else corpus
-        val bloom = widx.bloom
-        val texts = docs.orderBy("doc_id").limit(64)
-          .select("text").collect().map(_.getString(0))
-        // Stage-stripped A/B knob for knee attribution (VERDICT r12
-        // Next #4): SPARK_GRAFT_INGEST_STAGE truncates the per-batch
-        // chain after the named stage, so the per-stage cost at a
-        // fixed rate is the delta between successive runs —
-        //   window  → tokenize + rolling window-hash explode only
-        //   bloom   → + the map-side bloom-literal probe
-        //   confirm → + the exact-confirm semi-join vs the stored index
-        //   full    → + span merge + per-doc stats (the shipped chain)
-        val stage = sys.env.getOrElse("SPARK_GRAFT_INGEST_STAGE", "full")
-        def chain(b: DataFrame): DataFrame = stage match {
-          case "window" => Dedup.windowTable(b)
-          case "bloom" => Dedup.bloomProbe(Dedup.windowTable(b), bloom)
-          case "confirm" => Dedup.bloomProbe(Dedup.windowTable(b), bloom)
-            .join(corpusJ, Seq("h"), "left_semi")
-          case "full" => Dedup.spanStats(
-            Dedup.bloomProbe(Dedup.windowTable(b), bloom)
-              .join(corpusJ, Seq("h"), "left_semi"))
-          case other => sys.error(s"unknown SPARK_GRAFT_INGEST_STAGE: $other")
-        }
-        rateDocs(spark, rate, texts).writeStream
-          .option("checkpointLocation", ckpt).trigger(trigger)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            chain(b).write.format("noop").mode("overwrite").save()
-          }
-          .start()
-      case "st_index_health" =>
-        // the serving health check's capacity: a published index's
-        // frozen centroids (built from sfDir's embeddings, persisted
-        // with meta) against rate-driven 64-dim vector batches — per
-        // batch one map-side argmin + a k-row agg into a noop sink.
-        // The vectors follow GenScale's clustered mixing law, the
-        // appends measured in ADDPROBE_*_r12.json, so the assignment
-        // cost profile matches a real corpus, and the health row's
-        // d2_ratio reads the stationary ~1 band.
-        // SPARK_GRAFT_HEALTH_ADAPTIVE=1 publishes the corpus-adaptive
-        // index instead of the fixed k=8 — the production-k regime
-        // (k=200 at a 2M-vector corpus), where the per-row argmin is
-        // 25x the work and the health check's k-scaling shows
-        // SPARK_GRAFT_HEALTH_DIR: boot from an ALREADY-published
-        // artifact (e.g. AnnProbe's disk-published decade index) —
-        // the true serving shape, and the only tractable one at
-        // >=10^8 vectors where an in-session rebuild's cache blocks
-        // would not fit this host's disk.
-        val dir = sys.env.get("SPARK_GRAFT_HEALTH_DIR").getOrElse {
-          if (sys.env.get("SPARK_GRAFT_HEALTH_ADAPTIVE").contains("1")) {
-            val d = java.nio.file.Files.createTempDirectory("graft_ivf_pub").toString
-            graft.sim.IvfStore.save(
-              graft.sim.Sim.ivfIndexAdaptive(spark, sfDir, iters = 3), d)
-            d
-          } else graft.sim.Sim.publishedIndexDir(spark, sfDir, k = 8, iters = 3)
-        }
-        val idx = graft.sim.IvfStore.load(spark, dir)
-        val meta = graft.sim.IvfStore.loadMeta(spark, dir)
-        val raw = transform(sequence(lit(0), lit(63)), i =>
-          (pmod(xxhash64(col("vec_id"), lit(999), i), lit(2001L)).cast("double")
-            - 1000.0) / 1000.0)
-        val vecs = valueStream(spark, rate, rowsPerBatch)
-          .select(col("value").as("vec_id"))
-          .withColumn("v", raw)
-        vecs.writeStream
-          .option("checkpointLocation", ckpt).trigger(trigger)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            graft.sim.Sim.indexHealth(b, idx.centroids, meta)
-              .write.format("noop").mode("overwrite").save()
-          }
-          .start()
-      case "st_ann" =>
-        // sustained ANN-serving capacity: rate-driven PROBE batches
-        // search the published index per micro-batch (the st_ann
-        // lookup-service shape) into a noop sink. Complements the
-        // AnnProbe latency artifacts (ms/probe on one batch) with the
-        // deployment number: probes/s/node a serving job sustains.
-        // SPARK_GRAFT_HEALTH_ADAPTIVE=1 serves the corpus-adaptive
-        // index (k=200 at 2M vectors) — candidates per probe are
-        // nprobe*n/k, so the knee rides the corpus/cell geometry.
-        // Serving layout chosen by the DEPLOY RULE at index-build time
-        // (IvfStore.partitionedLayoutDue): the probe's (rate, trigger)
-        // pin the expected probes per micro-batch, k and nprobe are
-        // known before the publish — partition by cell (and serve from
-        // the artifact with probed cells pushed as static
-        // PartitionFilters; Sim.searchIvfProbes prunes when
-        // idx.prunable) exactly when a typical batch cannot cover the
-        // index (ANNLAYOUT_AB_VEC2M_r13: 1.33x on sparse batches;
-        // STREAMPROBE_ANN5_K200_*_r14: the pruned path is the only
-        // stable sustained run at 35% coverage).
-        // SPARK_GRAFT_ANN_PARTITIONED=1/0 overrides the rule.
-        // SPARK_GRAFT_HEALTH_DIR: boot from an ALREADY-published
-        // artifact (the decade-scale serving shape — an in-session
-        // rebuild at 10^8 vectors fits neither this host's disk nor
-        // a capture budget); k/nprobe/layout come from the
-        // artifact's meta. SPARK_GRAFT_ANN_PRUNE=0 then serves the
-        // SAME artifact with pruning disabled — the flat-scan
-        // control for a pruned-vs-flat A/B at a scale where two
-        // 39 GB layouts cannot coexist on one host's disk.
-        val adaptive = sys.env.get("SPARK_GRAFT_HEALTH_ADAPTIVE").contains("1")
-        val bootDir = sys.env.get("SPARK_GRAFT_HEALTH_DIR")
-        val bootMeta = bootDir.map(d => graft.sim.IvfStore.loadMeta(spark, d))
-        val k = bootMeta.map(_.k.toInt).getOrElse {
-          if (adaptive)
-            graft.sim.Sim.semDedupCells(graft.sim.Sim.corpusCount(spark, sfDir))
-          else 8
-        }
-        val nprobe = math.max(2, math.round(math.sqrt(k.toDouble)).toInt)
-        val expProbes = rowsPerBatch.map(_.toLong)
-          .getOrElse(math.max(1L, rate.toLong * triggerMs / 1000L))
-        val partServe = bootMeta match {
-          case Some(m) =>
-            m.partitioned && !sys.env.get("SPARK_GRAFT_ANN_PRUNE").contains("0")
-          case None => sys.env.get("SPARK_GRAFT_ANN_PARTITIONED") match {
-            case Some("1") => true
-            case Some("0") => false
-            case _ => graft.sim.IvfStore.partitionedLayoutDue(expProbes, nprobe, k)
-          }
-        }
-        servedPartitioned = Some(partServe)
-        val dir = bootDir.getOrElse {
-          if (adaptive) {
-            val d = java.nio.file.Files.createTempDirectory("graft_ivf_pub").toString
-            graft.sim.IvfStore.save(
-              graft.sim.Sim.ivfIndexAdaptive(spark, sfDir, iters = 3), d,
-              partitioned = partServe)
-            d
-          } else graft.sim.Sim.publishedIndexDir(spark, sfDir, k = 8, iters = 3,
-            partitioned = partServe)
-        }
-        val loaded = graft.sim.IvfStore.load(spark, dir)
-        val idx = if (loaded.prunable && !partServe) loaded.copy(prunable = false)
-          else loaded
-        // serve from memory only when the index plausibly FITS: ~536 B
-        // per row (64 doubles + ids) vs half the heap. At 2M that is
-        // the measured flat-serve shape; a 100M flat control must
-        // serve from storage or the persist itself dies on local disk.
-        val estBytes = graft.sim.IvfStore.loadMeta(spark, dir).n * 536L
-        if (!partServe && estBytes <= Runtime.getRuntime.maxMemory() / 2)
-          idx.assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            .count() // load the index OUTSIDE the window
-        // SPARK_GRAFT_ANN_ADC=1: serve the PRODUCTION ANN composition
-        // (route × PQ ADC scan × exact re-rank, s_ivf_adc's shape) per
-        // micro-batch instead of the exact-cosine cell scan. The
-        // shortlist comes from the REGISTERED rule (Sim.adcShortlist —
-        // the divisor-8 decade knee), never an env constant, so a
-        // capture measures the shipped configuration; the artifact
-        // self-describes the resolved rule. The exact-re-rank fetch is
-        // cid-pruned against a partitioned artifact (candidates are
-        // guaranteed to live in probed cells — the IN filter is the
-        // same static-partition-pruning move as searchIvfProbes', on
-        // the refine scan), and the served-recall eval AFTER the
-        // stream (annRecall) drives this same function, so recall and
-        // latency are measured at one geometry.
-        val serve: DataFrame => DataFrame =
-          if (sys.env.get("SPARK_GRAFT_ANN_ADC").contains("1")) {
-            val meta = graft.sim.IvfStore.loadMeta(spark, dir)
-            val books = graft.sim.Sim.pqBooks(spark, sfDir)
-            val coded = graft.sim.Sim.encodePq(idx.assigned, books)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            coded.count() // encode OUTSIDE the measured window
-            val cand = nprobe.toLong * meta.n / math.max(k, 1)
-            val sl = graft.sim.Sim.adcShortlist(cand)
-            val fetchBc = sys.env.get("SPARK_GRAFT_ANN_FETCH_BC").map(_ == "1")
-              .getOrElse(expProbes * sl * 16 <= (256L << 20))
-            def serveAdc(b: DataFrame): DataFrame = {
-              val src =
-                if (partServe) {
-                  val cids = graft.sim.Sim.routedCids(b, idx.centroids, nprobe)
-                  if (cids.length < idx.centroids.size)
-                    idx.assigned.filter(col("cid").isin(cids.toIndexedSeq: _*))
-                  else idx.assigned
-                } else idx.assigned
-              graft.sim.Sim.searchIvfAdcProbes(
-                src.select(col("vec_id"), col("v")), b, idx.centroids,
-                books, coded, nprobe, sl, fetchByBroadcast = fetchBc)
-            }
-            annExtra = s""""adc_serve":true,"shortlist":$sl,""" +
-              s""""shortlist_rule":"max(50,cand/${
-                graft.sim.Sim.adcShortlistDivisor(cand)})",""" +
-              s""""nprobe":$nprobe,"cand_per_probe":$cand,""" +
-              s""""fetch_broadcast":$fetchBc,"""
-            annRecall = Some { () =>
-              // recall of THE SERVED PATH vs exact brute force, on the
-              // standard corpus-drawn recall probes (vec_id ∈ [2000,
-              // 2000+R) — the same set every ANNPROBE artifact uses,
-              // so this number is directly comparable to the RULE8
-              // search-side 0.993)
-              val rp = sys.env.get("SPARK_GRAFT_ANN_RECALL_PROBES")
-                .map(_.toInt).getOrElse(50)
-              val rBase = 2000L
-              val probesR = idx.assigned
-                .filter(col("vec_id") >= rBase && col("vec_id") < rBase + rp)
-                .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              probesR.count()
-              val ev = idx.assigned.select(col("vec_id"), col("v"))
-              val t0 = System.nanoTime()
-              val brute = graft.Caching.releaseAfter(
-                graft.sim.AnnProbe.bruteTop3(probesR, ev))
-              val denom = brute.count().toDouble
-              val secBrute = (System.nanoTime() - t0) / 1e9
-              val hits = serveAdc(probesR)
-                .select(col("probe_id"), col("neighbor_id"))
-                .join(brute, Seq("probe_id", "neighbor_id")).count()
-              val recall = if (denom == 0) 1.0 else hits / denom
-              s""""recall_probes":$rp,"sec_brute":${fmt(secBrute)},""" +
-                s""""recall_adc_served":${fmt(recall)},"""
-            }
-            serveAdc
-          } else (b: DataFrame) => graft.sim.Sim.searchIvfProbes(idx, b, nprobe)
-        val raw = transform(sequence(lit(0), lit(63)), i =>
-          (pmod(xxhash64(col("probe_id"), lit(999), i), lit(2001L)).cast("double")
-            - 1000.0) / 1000.0)
-        val probes = valueStream(spark, rate, rowsPerBatch)
-          .select(col("value").as("probe_id"))
-          .withColumn("pv", raw)
-        probes.writeStream
-          .option("checkpointLocation", ckpt).trigger(trigger)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            serve(b).write.format("noop").mode("overwrite").save()
-          }
-          .start()
-      case other => sys.error(s"unknown probe query: $other " +
-        "(expected st_pipeline|st_sessions|st_dedup_ingest|st_index_health|st_ann)")
+    try {
+      val (q, cached) =
+        start(spark, query, sfDir, rate, graft.Caching.scratchTempDir("graft_tput_ckpt"))
+      try {
+        // drive until nBatches DATA batches completed (rate always has
+        // rows, but guard on inputRows anyway) or the safety timeout
+        val timeoutMs = math.max(nBatches * TriggerMs * 10, 600000L)
+        val t0 = System.currentTimeMillis()
+        while (obs.synchronized(obs.count(_.inputRows > 0)) < nBatches &&
+               System.currentTimeMillis() - t0 < timeoutMs && q.isActive)
+          Thread.sleep(200)
+      } finally {
+        q.stop()
+        cached.foreach(_.unpersist())
+      }
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set(partsKey, prevParts)
+      graft.Caching.releaseTransient()
     }
 
-    // drive until nBatches DATA batches completed (rate always has
-    // rows, but guard on inputRows anyway) or the safety timeout
-    val timeoutMs = sys.env.get("SPARK_GRAFT_TPUT_TIMEOUT_MS").map(_.toLong)
-      .getOrElse(math.max(nBatches * triggerMs * 10, 600000L))
-    val t0 = System.currentTimeMillis()
-    while (obs.synchronized(obs.count(_.inputRows > 0)) < nBatches &&
-           System.currentTimeMillis() - t0 < timeoutMs && q.isActive)
-      Thread.sleep(200)
-    q.stop()
-    spark.streams.removeListener(listener)
-    // the served-recall eval drives the serve stack itself — it must
-    // run after the stream so it never contends with a measured batch
-    val recallJson = annRecall.map(f => f()).getOrElse("")
-
     val all = obs.synchronized(obs.filter(_.inputRows > 0).toVector)
-    if (all.size <= warmup)
-      sys.error(s"only ${all.size} data batches completed (need > $warmup) — " +
-        s"rate $rate with trigger ${triggerMs}ms never reached steady state")
-    val steady = all.drop(warmup)
-    val wallSec = (steady.last.atNanos - all(warmup - 1).atNanos) / 1e9
+    if (all.size <= Warmup)
+      sys.error(s"only ${all.size} data batches completed (need > $Warmup) — " +
+        s"rate $rate with trigger ${TriggerMs}ms never reached steady state")
+    val steady = all.drop(Warmup)
+    val wallSec = (steady.last.atNanos - all(Warmup - 1).atNanos) / 1e9
     val rows = steady.map(_.inputRows).sum
     val durs = steady.map(_.triggerMs).sorted
     def pct(p: Double) = durs(math.min(durs.size - 1, (p * durs.size).toInt))
     val p50 = pct(0.50); val p95 = pct(0.95)
     val stateTraj = Seq(steady.head, steady(steady.size / 2), steady.last)
-    def num(v: Double) = fmt(v)
     val provider = spark.conf
       .get("spark.sql.streaming.stateStore.providerClass").split("\\.").last
+    val (stable, frac, growth) =
+      stability(rate.toDouble, rows / wallSec, steady.map(_.triggerMs), TriggerMs)
+    s"""{"metric":"stream_throughput","degraded":${Capture.degraded(loadStart)},""" +
+      s""""load_avg_start":${fmt(loadStart)},"query":"$query","provider":"$provider",""" +
+      s""""rate_rows_per_sec":$rate,"trigger_ms":$TriggerMs,""" +
+      s""""batches":${all.size},"warmup_excluded":$Warmup,""" +
+      s""""rows_steady":$rows,"wall_sec_steady":${fmt(wallSec)},""" +
+      s""""rows_per_sec_sustained":${fmt(rows / wallSec)},""" +
+      s""""processed_rows_per_sec_avg":${fmt(steady.map(_.processedPerSec).sum / steady.size)},""" +
+      s""""batch_ms_p50":$p50,"batch_ms_p95":$p95,"batch_ms_max":${durs.last},""" +
+      s""""stable":$stable,"stable_strict":${p95 <= TriggerMs},""" +
+      s""""sustained_frac":${fmt(frac)},"batch_growth":${fmt(growth)},""" +
+      s""""input_rows_per_batch_avg":${rows / steady.size},""" +
+      s""""state_rows_first_mid_last":[${stateTraj.map(_.stateRows).mkString(",")}],""" +
+      s""""state_bytes_first_mid_last":[${stateTraj.map(_.stateBytes).mkString(",")}],""" +
+      s""""load_avg":${fmt(Capture.loadAvg())}}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    if (args.length < 4) sys.error(Usage)
+    val outFile = args.lift(4)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = graft.GraftSession.local(cpus)
     val line =
-      s"""{"metric":"stream_throughput","degraded":${Capture.degraded(loadStart)},""" +
-        s""""load_avg_start":${num(loadStart)},"query":"$query","provider":"$provider",""" +
-        sys.env.get("SPARK_GRAFT_INGEST_STAGE")
-          .map(st => s""""ingest_stage":"$st",""").getOrElse("") +
-        servedPartitioned
-          .map(p => s""""partitioned_serve":$p,""").getOrElse("") +
-        annExtra + recallJson +
-        // rows_per_sec_sustained counts SOURCE-READ rows, and a serve
-        // plan that references the batch more than once (st_ann ADC:
-        // the routing collect, the ADC scan, and the pv re-attach each
-        // rescan the micro-batch source — measured 3x) inflates
-        // numInputRows by that factor. Under per-batch pacing the true
-        // probe count is exact by construction, so the honest serving
-        // rate is emitted alongside.
-        rowsPerBatch
-          .map(n => s""""paced":"per_batch","rows_per_batch":$n,""" +
-            s""""probes_per_sec_sustained":${
-              num(n.toDouble * steady.size / wallSec)},""").getOrElse("") +
-        s""""rate_rows_per_sec":$rate,"trigger_ms":$triggerMs,""" +
-        s""""batches":${all.size},"warmup_excluded":$warmup,""" +
-        s""""rows_steady":$rows,"wall_sec_steady":${num(wallSec)},""" +
-        s""""rows_per_sec_sustained":${num(rows / wallSec)},""" +
-        s""""processed_rows_per_sec_avg":${num(steady.map(_.processedPerSec).sum / steady.size)},""" +
-        s""""batch_ms_p50":$p50,"batch_ms_p95":$p95,"batch_ms_max":${durs.last},""" + {
-          // per-batch pacing has no arrival rate to keep: feed the
-          // achieved throughput back so sustained_frac is 1.0 by
-          // definition and `stable` carries only the tail+growth terms
-          val effRate =
-            if (rowsPerBatch.isDefined) rows / wallSec else rate.toDouble
-          val (stable, frac, growth) =
-            stability(effRate, rows / wallSec,
-              steady.map(_.triggerMs), triggerMs)
-          s""""stable":$stable,"stable_strict":${p95 <= triggerMs},""" +
-            s""""sustained_frac":${num(frac)},"batch_growth":${num(growth)},"""
-        } +
-        s""""input_rows_per_batch_avg":${rows / steady.size},""" +
-        s""""state_rows_first_mid_last":[${stateTraj.map(_.stateRows).mkString(",")}],""" +
-        s""""state_bytes_first_mid_last":[${stateTraj.map(_.stateBytes).mkString(",")}],""" +
-        s""""load_avg":${num(Capture.loadAvg())}}"""
+      try run(spark, args(0), args(1), args(2).toInt, args(3).toInt)
+      finally spark.stop()
     outFile.foreach(p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p), line + "\n"))
     println(line)
-    spark.stop()
   }
 }

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** AnnProbe's brute-force recall baseline was rewritten in r15 from a
-  * row_number window (which sort-exchanges probes×corpus candidate
-  * rows — ~100 GB of spill at 100M vectors) to a bounded
+import graft.sim.Sim.bruteTop3
+
+/** `Sim.bruteTop3`, the brute-force recall baseline, was rewritten in
+  * r15 from a row_number window (which sort-exchanges probes×corpus
+  * candidate rows — ~100 GB of spill at 100M vectors) to a bounded
   * per-partition top-3 merge. The selected (probe, neighbor) set must
   * be IDENTICAL to the window form — it is the denominator of every
   * recall@3 number the ANN scale claims rest on.
@@ -27,7 +29,7 @@ class AnnBruteTopKSpec extends SparkSpec {
       .filter(col("rank") <= 3)
       .select(col("probe_id"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bounded = graft.sim.AnnProbe.bruteTop3(probesR, ev)
+    val bounded = bruteTop3(probesR, ev)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(bounded === windowed)
     assert(bounded.size === 12 * 3)
@@ -43,7 +45,7 @@ class AnnBruteTopKSpec extends SparkSpec {
     val ev2 = base.unionByName(dup)
     val p2 = ev2.filter(col("vec_id") === 7)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-    val got = graft.sim.AnnProbe.bruteTop3(p2, ev2)
+    val got = bruteTop3(p2, ev2)
       .collect().map(_.getLong(1)).toSet
     // both duplicates have cosine 1.0 with the probe; the third slot
     // goes to the best non-duplicate — and 9001 < 9002 both make it
@@ -66,7 +68,7 @@ class AnnBruteTopKSpec extends SparkSpec {
     val ev2 = ev.limit(40).unionByName(zero).unionByName(nan)
     val probes = ev2.filter(col("vec_id") < 8)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-    val got = graft.sim.AnnProbe.bruteTop3(probes, ev2)
+    val got = bruteTop3(probes, ev2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.nonEmpty)
     assert(!got.exists { case (_, nb) => nb == 9101L || nb == 9102L })

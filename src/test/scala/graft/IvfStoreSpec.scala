@@ -354,7 +354,7 @@ class IvfStoreSpec extends SparkSpec {
 
   test("ADC serve from a partitioned artifact: cid-pruned refine is " +
       "result-identical and the IN set reaches PartitionFilters") {
-    // the st_ann ADC-serving shape (StreamThroughputProbe serveAdc):
+    // the ADC-serving shape over a cid-partitioned artifact:
     // the exact-re-rank fetch reads the published artifact filtered to
     // the batch's routed cells (Sim.routedCids) — candidates are
     // guaranteed to live in probed cells, so the filter must be a

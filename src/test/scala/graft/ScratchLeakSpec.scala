@@ -1,20 +1,12 @@
 package graft
 
-import java.io.File
-
 /** No registered stream query leaves a dir behind: every checkpoint,
   * per-batch output, sink dir and stored index it makes is released at
   * the harness boundaries Verify crosses (releaseTransient after each
   * query, releaseAll at the end).
   */
 class ScratchLeakSpec extends SparkSpec {
-
-  private def graftEntries(): Set[String] =
-    Seq(new File(System.getProperty("java.io.tmpdir")), Caching.scratchRoot.toFile)
-      .flatMap(root => Option(root.listFiles()).getOrElse(Array.empty[File]))
-      .filter(_.getName.startsWith("graft_"))
-      .map(_.getPath)
-      .toSet
+  import SparkSpec.graftEntries
 
   test("every st_* query leaves no graft_* dir under the tmpdir or the scratch root") {
     spark // the session's own warehouse dir exists before the snapshot

@@ -1,5 +1,6 @@
 package graft
 
+import java.io.File
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
@@ -37,4 +38,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.local(4)
+
+  /** Every `graft_*` entry directly under java.io.tmpdir or the
+    * scratch root — the snapshot leak checks diff before and after.
+    */
+  def graftEntries(): Set[String] =
+    Seq(new File(System.getProperty("java.io.tmpdir")), Caching.scratchRoot.toFile)
+      .flatMap(root => Option(root.listFiles()).getOrElse(Array.empty[File]))
+      .filter(_.getName.startsWith("graft_"))
+      .map(_.getPath)
+      .toSet
 }
