@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Side-channel for per-query I/O telemetry the wall clock alone can't
@@ -278,7 +279,7 @@ object Bench {
     // running. Printing last keeps the JSON the final stdout content.
     try {
       spark.sparkContext.setLogLevel("OFF")
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
+      spark.streams.active.foreach(q => try q.stop() catch { case NonFatal(_) => () })
       Caching.releaseAll()
       spark.stop()
     } catch { case e: Throwable => System.err.println(s"[bench] shutdown: $e") }

@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -48,7 +49,7 @@ object Verify {
     // leave an explicit marker file next to the partial output.
     only.foreach(o => Files.writeString(Paths.get(s"$outDir/_SUBSET.txt"),
       o.toSeq.sorted.mkString(",") + "\n"))
-    spark.streams.active.foreach(qr => try qr.stop() catch { case _: Throwable => () })
+    spark.streams.active.foreach(qr => try qr.stop() catch { case NonFatal(_) => () })
     Caching.releaseAll()
     spark.stop()
   }

@@ -1,5 +1,5 @@
 package graft
-
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine operator exposed to the driver harness.
@@ -104,7 +104,7 @@ object Caching {
     */
   def releaseTransient(): Unit = {
     tracked.synchronized {
-      tracked.foreach(r => try r.unpersist(blocking = true) catch { case _: Throwable => () })
+      tracked.foreach(r => try r.unpersist(blocking = true) catch { case NonFatal(_) => () })
       tracked.clear()
     }
     // Streaming queries leak TWO things past q.stop() in a shared JVM,
@@ -119,12 +119,12 @@ object Caching {
     // their job, which is exactly what this boundary emulates.
     transientViews.synchronized {
       transientViews.foreach { case (s, v) =>
-        try s.catalog.dropTempView(v) catch { case _: Throwable => () }
+        try s.catalog.dropTempView(v) catch { case NonFatal(_) => () }
       }
       transientViews.clear()
     }
     try org.apache.spark.sql.graftshim.Shim.unloadAllStateStores()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // scratch dirs of stopped streams (checkpoints, per-batch outputs,
     // sink dirs): nothing reads them once the query's result is
     // drained, and leaving them accumulates across a
@@ -132,7 +132,7 @@ object Caching {
     // scratch the r16 sf10 sweep exhausted.
     transientDirs.synchronized {
       transientDirs.foreach { p =>
-        try deleteRecursively(p) catch { case _: Throwable => () }
+        try deleteRecursively(p) catch { case NonFatal(_) => () }
       }
       transientDirs.clear()
     }
@@ -220,10 +220,10 @@ object Caching {
     * driver GC happens to run.
     */
   def releaseAll(): Unit = {
-    hooks.synchronized { hooks.foreach(h => try h() catch { case _: Throwable => () }) }
+    hooks.synchronized { hooks.foreach(h => try h() catch { case NonFatal(_) => () }) }
     releaseTransient()
     retained.synchronized {
-      retained.foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => () })
+      retained.foreach(r => try r.unpersist(blocking = false) catch { case NonFatal(_) => () })
       retained.clear()
     }
   }

@@ -111,10 +111,6 @@ package object gfunctions {
   def cosine(a: Column, b: Column): Column =
     safeDiv(dotProduct(a, b), sqrt(dotProduct(a, a)) * sqrt(dotProduct(b, b)))
 
-  /** L2 norm of an array column. */
-  def l2norm(a: Column): Column =
-    sqrt(dotProduct(a, a))
-
   // ---- skew salting ----------------------------------------------------
   //
   // For hot keys that AQE's skew-join split can't fix (e.g. a single

@@ -2,7 +2,6 @@ package graft.sim
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.sim.Sim.IvfIndex
 
@@ -15,11 +14,12 @@ import graft.sim.Sim.IvfIndex
   * than the build.
   *
   * Artifact layout under `dir` — VERSIONED (atomic publish):
-  *   - `v{n}/assigned/`  — the IVF-assigned corpus (vec_id, v, cid, d2);
-  *     flat parquet, or `cid=`-partitioned when saved `partitioned=true`
+  *   - `v{n}/assigned/`  — the IVF-assigned corpus (vec_id, v, cid, d2),
+  *     flat parquet; a search routes probes to cells in the cid
+  *     equi-join (Sim.searchIvfProbes), not in the scan
   *   - `v{n}/centroids/` — the final centroids (cid, cv)
   *   - `v{n}/meta/`      — one row of retrain-trigger baselines
-  *     (see [[IvfMeta]]) + the layout flag
+  *     (see [[IvfMeta]])
   *   - `manifest/{n}`    — empty marker file; its CREATE is the publish
   *   - `codebooks/`, `coded/` — the PQ artifacts (separate family,
   *     written once by [[savePq]], unversioned)
@@ -54,8 +54,7 @@ object IvfStore {
     *     time (the rule's "doubles from build" reference point)
     *   - `k`, `n`    — centroid count and corpus size at save time
     */
-  final case class IvfMeta(d2Base: Double, imbalance: Double, k: Int, n: Long,
-                           partitioned: Boolean = false)
+  final case class IvfMeta(d2Base: Double, imbalance: Double, k: Int, n: Long)
 
   /** The trigger baselines of an in-memory index — one agg pass over
     * `assigned` (k-row intermediate). save() runs this over the
@@ -97,30 +96,6 @@ object IvfStore {
 
   private def vDir(dir: String, v: Long) = s"$dir/v$v"
 
-  /** The explicit read schema for a `cid=`-partitioned assigned dir:
-    * directory-name inference would type the cid partition column INT,
-    * and the repairing long cast wraps the join key — blocking both
-    * DPP and the static `cid IN (...)` push (measured in
-    * ANNLAYOUT_AB_VEC2M_r13.json).
-    */
-  private val AssignedSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("v",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)),
-    org.apache.spark.sql.types.StructField("d2",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("cid",
-      org.apache.spark.sql.types.LongType)))
-
-  private def readAssigned(s: SparkSession, vdir: String,
-                           partitioned: Boolean): DataFrame =
-    if (partitioned)
-      s.read.schema(AssignedSchema).parquet(s"$vdir/assigned")
-        .select(col("vec_id"), col("v"), col("cid"), col("d2"))
-    else s.read.parquet(s"$vdir/assigned")
-
   /** Persist the index artifacts as the next version and publish it
     * atomically (see the object doc's protocol). `dir` may be — and
     * in the documented serving lifecycle IS — the directory backing
@@ -129,36 +104,17 @@ object IvfStore {
     * so the write never consumes its own input. Frames loaded BEFORE a
     * save keep reading their own (retained) version; consumers use the
     * returned/re-loaded index, as compact/compactRetrain do.
-    *
-    * `partitioned=true` lays the assigned corpus out `cid=`-partitioned
-    * (one file per cell via repartition(cid)) so a serving search can
-    * push its probed cells as static PartitionFilters — the measured
-    * 1.33x sparse-batch lift (ANNLAYOUT_AB_VEC2M_r13); [[load]] marks
-    * the index prunable and Sim.searchIvfProbes applies the push.
     * The meta computation reads only (cid, d2) — a column-pruned
     * fraction of the index bytes.
-    *
-    * `exchange=false` (partitioned only) skips the repartition and
-    * writes the layout MAP-SIDE from the input's own partitions —
-    * files per cell = input partitions that contain it, not one. The
-    * cell-exchange is the right default (co-located single-file
-    * cells), but it stages the full corpus through shuffle disk; a
-    * publisher whose upstream is already well-partitioned — or whose
-    * node cannot hold corpus + shuffle + staged layout at once — can
-    * trade file granularity for zero shuffle. Pruning semantics are
-    * identical (PartitionFilters skip directories either way).
     */
-  def save(idx: IvfIndex, dir: String, partitioned: Boolean = false,
-           exchange: Boolean = true): Unit =
-    save(idx, dir, partitioned, exchange, () => ())
+  def save(idx: IvfIndex, dir: String): Unit = save(idx, dir, () => ())
 
   /** `onStaged` runs after the staging write, before the claim — the
     * seam where a concurrent publisher can fully publish v{next}
     * first. Test-only (IvfStoreSpec drives the race through it
     * deterministically); production callers use the public form.
     */
-  private[graft] def save(idx: IvfIndex, dir: String, partitioned: Boolean,
-                          exchange: Boolean, onStaged: () => Unit): Unit = {
+  private[graft] def save(idx: IvfIndex, dir: String, onStaged: () => Unit): Unit = {
     val s = idx.assigned.sparkSession
     import s.implicits._
     val cur = currentVersion(s, dir)
@@ -168,17 +124,12 @@ object IvfStore {
     // same version writes somewhere ELSE, so v{next} can only ever
     // hold ONE writer's complete artifact set — never an interleaving
     val stage = s"$dir/.stage_v${next}_${java.util.UUID.randomUUID().toString.take(8)}"
-    if (partitioned) {
-      val sel = idx.assigned.select(col("vec_id"), col("v"), col("d2"), col("cid"))
-      (if (exchange) sel.repartition(col("cid")) else sel)
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$stage/assigned")
-    } else
-      idx.assigned.write.mode("overwrite").parquet(s"$stage/assigned")
+    idx.assigned.write.mode("overwrite").parquet(s"$stage/assigned")
     idx.centroids.toDF("cid", "cv")
       .write.mode("overwrite").parquet(s"$stage/centroids")
-    val m = computeMeta(readAssigned(s, stage, partitioned), idx.centroids.size)
-    Seq((m.d2Base, m.imbalance, m.k, m.n, partitioned))
-      .toDF("d2_base", "imbalance", "k", "n", "partitioned")
+    val m = computeMeta(s.read.parquet(s"$stage/assigned"), idx.centroids.size)
+    Seq((m.d2Base, m.imbalance, m.k, m.n))
+      .toDF("d2_base", "imbalance", "k", "n")
       .write.mode("overwrite").parquet(s"$stage/meta")
     onStaged()
     // claim v{next}. Order: marker check → markerless-wreckage
@@ -261,11 +212,9 @@ object IvfStore {
     val v = currentVersion(s, dir)
     require(v >= 0, s"IvfStore.load: no published version under $dir")
     val vdir = vDir(dir, v)
-    val meta = loadMetaAt(s, vdir)
     val cents = s.read.parquet(s"$vdir/centroids").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-    IvfIndex(readAssigned(s, vdir, meta.partitioned), cents,
-      prunable = meta.partitioned)
+    IvfIndex(s.read.parquet(s"$vdir/assigned"), cents)
   }
 
   /** The trigger baselines of a published index — a 1-row parquet
@@ -286,7 +235,7 @@ object IvfStore {
   private def loadMetaAt(s: SparkSession, vdir: String): IvfMeta = {
     val r = s.read.parquet(s"$vdir/meta").head()
     IvfMeta(r.getAs[Double]("d2_base"), r.getAs[Double]("imbalance"),
-      r.getAs[Int]("k"), r.getAs[Long]("n"), r.getAs[Boolean]("partitioned"))
+      r.getAs[Int]("k"), r.getAs[Long]("n"))
   }
 
   def savePq(books: Seq[Seq[(Long, Seq[Double])]], coded: DataFrame,
@@ -348,25 +297,6 @@ object IvfStore {
 
   def retrainDue(d2Ratio: Double, imbalance: Double, meta: IvfMeta): Boolean =
     d2Ratio >= D2RatioTrigger || imbalance >= ImbalanceDoubling * meta.imbalance
-
-  /** The serving-layout deploy rule as CODE (it lived only in prose +
-    * an env opt-in until r15): publish `cid=`-partitioned exactly when
-    * a TYPICAL probe batch cannot cover the index — the distinct
-    * probed cells per batch are bounded by batch_probes·nprobe, and
-    * once that bound reaches k every batch routes to every cell, so
-    * Sim.searchIvfProbes skips the static prune and the partitioned
-    * layout buys nothing (it only costs the one-file-per-cell write).
-    * Below the bound, batches are sparse and pruning is the measured
-    * win: 1.33× candidate-scan latency on sparse batches
-    * (ANNLAYOUT_AB_VEC2M_r13), and at 35% expected coverage
-    * (5 probes·nprobe 14 against k=200) the pruned path was the only
-    * STABLE sustained-serving run (STREAMPROBE_ANN5_K200_{PART,CTRL}
-    * _r14: p95 908 vs 1214 ms). Same boundary as the runtime skip in
-    * searchIvfProbes — publish-side and serve-side agree by
-    * construction.
-    */
-  def partitionedLayoutDue(expectedBatchProbes: Long, nprobe: Int, k: Int): Boolean =
-    expectedBatchProbes * nprobe < k
 
   /** Offline rebuild at the CURRENT size — the operation the trigger
     * rule fires after enough [[add]] batches: k rides
@@ -439,22 +369,8 @@ object IvfStore {
     * save→load→add→compactRetrain(SAME dir)→search round trip in
     * IvfStoreSpec).
     */
-  /** The layout a maintenance write-back must preserve: the published
-    * version's meta.partitioned when `dir` already holds one (the
-    * documented same-dir cycle — a cid-partitioned serving index must
-    * not come out of its first compaction silently FLAT, losing the
-    * measured sparse-batch pruning win), else the in-memory index's
-    * own prunable flag (a first save to a fresh dir).
-    */
-  private def maintainLayout(idx: IvfIndex, dir: String): Boolean = {
-    val s = idx.assigned.sparkSession
-    if (currentVersion(s, dir) >= 0) loadMeta(s, dir).partitioned else idx.prunable
-  }
-
   def compactRetrain(idx: IvfIndex, dir: String): IvfIndex = {
-    val layout = maintainLayout(idx, dir)
-    val fresh = retrain(idx.assigned)
-    save(fresh, dir, partitioned = layout)
+    save(retrain(idx.assigned), dir)
     load(idx.assigned.sparkSession, dir)
   }
 
@@ -472,7 +388,7 @@ object IvfStore {
     * writes a fresh `v{n}/`, so the write never consumes its own input.
     */
   def compact(idx: IvfIndex, dir: String): IvfIndex = {
-    save(idx, dir, partitioned = maintainLayout(idx, dir))
+    save(idx, dir)
     load(idx.assigned.sparkSession, dir)
   }
 

@@ -210,15 +210,13 @@ object Sim {
   /** A built IVF index: the assigned corpus (vec_id, v, cid, d2,
     * materialized once) plus the final centroids, held driver-side —
     * k·dim doubles, i.e. kilobytes — so probe routing is a literal
-    * expression, never a join. `prunable` marks an index loaded from a
-    * `cid=`-partitioned published layout (IvfStore.save
-    * partitioned=true): [[searchIvfProbes]] then pushes the probed
-    * cells as a static `cid IN (...)` PartitionFilter so the scan
-    * skips every unprobed cell's files.
+    * expression, never a join. The same shape whether built in
+    * session or loaded from its flat published artifact
+    * (IvfStore.load): [[searchIvfProbes]] reaches the probed cells
+    * through the cid equi-join either way.
     */
   final case class IvfIndex(assigned: DataFrame,
-                            centroids: Seq[(Long, Seq[Double])],
-                            prunable: Boolean = false)
+                            centroids: Seq[(Long, Seq[Double])])
 
   /** Per-row distance table to the k centroids as an array of
     * struct(d2, cid) — evaluated map-side inside whole-stage codegen.
@@ -617,21 +615,6 @@ object Sim {
         explode(slice(array_sort(distStructs(col("pv"), cents)), 1, nprobe)).as("_pc"))
       .select(col("probe_id"), col("pv"), col("_pc.cid").as("cid"))
 
-  /** Driver-side routed-cell set for a probe batch — the bounded
-    * collect behind static partition pruning (distinct cids ≤ k, the
-    * same convention as searchIvfProbes' internal prune). Exposed for
-    * serving paths that must prune a SEPARATE frame from the one the
-    * search joins (e.g. the ADC refine fetch against a cid-partitioned
-    * published artifact: candidates are guaranteed to live in probed
-    * cells, so an IN filter on the refine scan is semantically a no-op
-    * that becomes static partition pruning on the store).
-    */
-  private[graft] def routedCids(probeFrame: DataFrame,
-                                cents: Seq[(Long, Seq[Double])],
-                                nprobe: Int): Array[Long] =
-    probeCells(probeFrame, cents, nprobe)
-      .select("cid").distinct().collect().map(_.getLong(0))
-
   /** Oracle-side probe→cell routing: rank the final centroids
     * `c{iters}` by (d2, cid) per probe, keep the nprobe nearest.
     */
@@ -684,32 +667,10 @@ object Sim {
     */
   def searchIvfProbes(idx: IvfIndex, probeFrame: DataFrame,
                       nprobe: Int = 2): DataFrame = {
-    val assigned0 = idx.assigned.select(col("vec_id"), col("v"), col("cid"))
     val probes = probeCells(probeFrame, idx.centroids, nprobe)
-    // cid-partitioned published layout: the probed cells are knowable
-    // driver-side (routing is a literal expression over the batch —
-    // distinct cids ≤ k, the bounded-collect convention), and an
-    // explicit IN filter on the scan is STATIC partition pruning:
-    // deterministic, no reliance on DPP's selective-filter heuristics
-    // (which never fire for a filterless tiny probe relation), and
-    // semantically a no-op — the cid equi-join below already restricts
-    // candidates to probed cells. Measured 1.33x on sparse batches
-    // (ANNLAYOUT_AB_VEC2M_r13). Default (flat) indexes skip this: one
-    // fewer job, byte-identical plans to pre-r14.
-    // Regime boundary (measured, STREAMPROBE_ANN50_K200_{PART,CTRL}_r14
-    // vs the sparse-batch layout A/B): pruning pays only when
-    // batch_probes·nprobe ≪ k — a dense batch routes to every cell and
-    // the IN filter is pure overhead, so it is skipped when the probed
-    // set covers the index.
-    val assigned =
-      if (idx.prunable) {
-        val cids = probes.select("cid").distinct().collect().map(_.getLong(0))
-        if (cids.length >= idx.centroids.size) assigned0
-        else assigned0.filter(col("cid").isin(cids.toIndexedSeq: _*))
-      } else assigned0
     val w = Window.partitionBy("probe_id").orderBy(col("cs").desc, col("neighbor_id"))
     broadcast(probes)
-      .join(assigned.select(col("vec_id").as("neighbor_id"), col("v"), col("cid")),
+      .join(idx.assigned.select(col("vec_id").as("neighbor_id"), col("v"), col("cid")),
         Seq("cid"))
       .filter(col("neighbor_id") =!= col("probe_id"))
       .select(col("probe_id"), col("neighbor_id"), cosine(col("pv"), col("v")).as("cs"))

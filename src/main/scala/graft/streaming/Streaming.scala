@@ -828,11 +828,10 @@ object Streaming {
     * each micro-batch searches the STATIC IVF index (built once,
     * centroids as literals, candidates via the cid equi-join): the
     * lookup-service shape, where the index is a built artifact and
-    * probes are the unbounded side. Served flat from Sim.ivfIndex: a
-    * batch of 10 probes × nprobe 2 covers all k = 8 cells, which is
-    * exactly when IvfStore.partitionedLayoutDue rules out the
-    * cid-partitioned layout (that layout's pruning is gated in
-    * IvfStoreSpec). Exactly-once per-batch dirs via [[runPerBatch]].
+    * probes are the unbounded side. Served from Sim.ivfIndex through
+    * Sim.searchIvfProbes, the one search path: a batch of 10 probes ×
+    * nprobe 2 reaches all k = 8 cells through the cid equi-join.
+    * Exactly-once per-batch dirs via [[runPerBatch]].
     * In the single-micro-batch harness the result is exactly
     * s_ivf_search, whose oracle applies verbatim.
     */

@@ -1,5 +1,6 @@
 package graft.text
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1233,7 +1234,7 @@ object Text {
       if (k == keep) (sess, beta, mt, feat)
       else {
         feat.foreach(f => org.apache.spark.sql.graftshim.Shim.checkpointedRdd(f)
-          .foreach(r => try r.unpersist(blocking = false) catch { case _: Throwable => () }))
+          .foreach(r => try r.unpersist(blocking = false) catch { case NonFatal(_) => () }))
         (sess, beta, mt, None)
       }
     }

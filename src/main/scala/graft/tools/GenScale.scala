@@ -13,13 +13,6 @@ import org.apache.spark.sql.functions._
   *     the surviving shared shingles give df ∝ factor and pair mass ∝
   *     factor². This is the duplication-adversarial regime where the
   *     adaptive df cap MUST tighten to keep pair shuffles linear.
-  *   - `vectors`: ONLY the embeddings table scales (everything else
-  *     is copied verbatim) — the cheap way to reach the 10⁶–10⁷
-  *     vector ANN regime without a 1000× documents/lineitem blow-up.
-  *     Replica vectors are CLUSTERED (256 hash-derived directions,
-  *     within-cluster cosine ≈ 0.75) — the regime IVF is deployed
-  *     for; `vectors_uniform` keeps the structureless redraw as the
-  *     recall worst-case control.
   *   - `fresh`: every token of replicas 1..N-1 carries a rep-unique
   *     suffix, so shingle vocabularies are DISJOINT across replicas —
   *     each replica reproduces the source corpus' own duplication
@@ -27,6 +20,8 @@ import org.apache.spark.sql.functions._
   *     corpus size, the budget is slack at any factor, and the
   *     adaptive cap must resolve to maxCap (bit-identical output to
   *     the fixed cap). This is the regime the cap must NOT touch.
+  *   - `events` / `docs`: only that one table scales (see their
+  *     branches below); every other table is copied verbatim.
   *
   * Replica 0 is the source data verbatim; replicas 1..N-1:
   *   - shift every key domain by rep·(max+1), so joins (orders ⋈
@@ -49,14 +44,28 @@ import org.apache.spark.sql.functions._
   */
 object GenScale {
 
+  private val dims = 0 until 64
+
+  /** The uniform re-draw of replica `rep`'s vector `vec_id` before
+    * normalization: 64 hash-derived coordinates in [-1, 1]. An
+    * EXPLICIT 64-element array of codegen-able expressions, not a
+    * transform lambda: higher-order functions always evaluate
+    * interpreted, and at factor 50000 that put ~10^10 interpreted
+    * xxhash64/pmod evals on the write path (measured: every executor
+    * thread pinned in HashExpression.eval). Bit-identical to the
+    * lambda form (GenScaleVecSpec), so replica r's vectors stay the
+    * same across scale factors and rounds.
+    */
+  private[graft] def rawVec: Column = array(dims.map(i =>
+    (pmod(xxhash64(col("vec_id"), col("rep"), lit(i)), lit(2001L)).cast("double")
+      - 1000.0) / 1000.0): _*)
+
   def main(args: Array[String]): Unit = {
     val Array(src, out) = args.take(2)
     val factor = if (args.length > 2) args(2).toInt else 10
     val docMode = if (args.length > 3) args(3) else "replica"
-    require(
-      Seq("replica", "fresh", "vectors", "vectors_uniform", "events", "docs")
-        .contains(docMode),
-      s"docmode must be replica|fresh|vectors|vectors_uniform|events|docs, got $docMode")
+    require(Seq("replica", "fresh", "events", "docs").contains(docMode),
+      s"docmode must be replica|fresh|events|docs, got $docMode")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = graft.GraftSession.local(cpus)
@@ -82,59 +91,14 @@ object GenScale {
     // re-drawn from the corpus' own distribution (independent unit
     // vectors sit ~0.125±σ cosine — below every near-dup gate),
     // vec_ids shifted out of the fixed probe range.
-    def scaleEmbeddings(clustered: Boolean): Unit = {
+    def scaleEmbeddings(): Unit = {
       val emb = read("embeddings")
       val V = stride(emb, "vec_id")
-      // every vector builder below is an EXPLICIT 64-element array of
-      // codegen-able expressions, not transform/aggregate/zip_with
-      // lambdas: higher-order functions always evaluate interpreted,
-      // and at factor 50000 that put ~10^10 interpreted xxhash64/pmod
-      // evals on the write path (measured: every executor thread
-      // pinned in HashExpression.eval). Same formula, same left-fold
-      // float order (0.0 + x² ≡ x² bitwise), so the produced vectors
-      // are bit-identical to the lambda form — replica r's vectors
-      // stay bit-identical across scale factors AND rounds.
-      val dims = 0 until 64
+      // same left-fold float order as the lambda form's aggregate
+      // (0.0 + x² ≡ x² bitwise)
       def sumSq(arr: String): Column =
         dims.map(i => element_at(col(arr), i + 1) * element_at(col(arr), i + 1))
           .reduce(_ + _)
-      val rawVec = array(dims.map(i =>
-        (pmod(xxhash64(col("vec_id"), col("rep"), lit(i)), lit(2001L)).cast("double")
-          - 1000.0) / 1000.0): _*)
-      // `vectors` (clustered) regime: replica vectors are drawn around
-      // 256 hash-derived unit cluster directions, v = √0.75·ĉ + 0.5·r̂
-      // normalized — within-cluster cosine ≈ 0.75, cross-cluster ≈ 0.
-      // This is the regime real embedding corpora live in (low
-      // intrinsic dimension, strong cluster structure) and the one IVF
-      // routing is deployed for; `vectors_uniform` keeps the
-      // structureless redraw as the worst-case control where recall
-      // can only come from scan fraction. Both are pure hash functions
-      // of (vec_id, rep, dim), so replica r's vectors are bit-identical
-      // across scale factors — cross-scale probes see nested corpora.
-      val withRaw =
-        if (!clustered)
-          (df: DataFrame) => df.withColumn("_raw", rawVec)
-        else {
-          val cidC = pmod(xxhash64(col("vec_id"), col("rep"), lit("cluster")), lit(256L))
-          val centerVec = array(dims.map(i =>
-            (pmod(xxhash64(col("_cid"), lit(i), lit("center")), lit(2001L)).cast("double")
-              - 1000.0) / 1000.0): _*)
-          // _c/_r0 materialize once per row as named columns (the 64
-          // hash evals each); the norms and the combined vector then
-          // read them via element_at — without the intermediates, the
-          // 64-term norm sums inlined into 64 output elements would
-          // re-hash 64×64 times per row
-          (df: DataFrame) => df
-            .withColumn("_cid", cidC)
-            .withColumn("_c", centerVec)
-            .withColumn("_r0", rawVec)
-            .withColumn("_cn", sqrt(sumSq("_c")))
-            .withColumn("_rn", sqrt(sumSq("_r0")))
-            .withColumn("_raw", array(dims.map(i =>
-              lit(math.sqrt(0.75)) * element_at(col("_c"), i + 1) / col("_cn") +
-                lit(0.5) * element_at(col("_r0"), i + 1) / col("_rn")): _*))
-            .drop("_cid", "_c", "_r0", "_cn", "_rn")
-        }
       // distribute the SOURCE vectors first, THEN replicate: the
       // source table is one parquet file (one partition), so the
       // factor rides a broadcast nested-loop join against the tiny
@@ -154,7 +118,8 @@ object GenScale {
       // single host — and 256 files scan strictly better than 32
       // anyway (content is deterministic; file assignment affects no
       // hash-checked result).
-      withRaw(emb.repartition(256).crossJoin(broadcast(reps)))
+      emb.repartition(256).crossJoin(broadcast(reps))
+        .withColumn("_raw", rawVec)
         .withColumn("_nrm", sqrt(sumSq("_raw")))
         .withColumn("embedding",
           when(col("rep") === 0, col("embedding"))
@@ -213,25 +178,6 @@ object GenScale {
       write(read("events").withColumn("rep", lit(0)), "events")
       write(read("embeddings").withColumn("rep", lit(0)), "embeddings")
       scaleDocuments(fresh = true)
-      spark.stop()
-      return
-    }
-
-    // `vectors`/`vectors_uniform` mode: an ANN-regime corpus — ONLY
-    // the embeddings table scales (factors of 1000+ reach the
-    // multi-million-vector regime where the routed-scan term
-    // nprobe·n/k dominates fixed overhead); every other table is
-    // copied verbatim so harness table-loading and probe tooling work
-    // against the dir unchanged. Scaling the full corpus to 2M
-    // vectors would mean a 1000x documents/lineitem blow-up this
-    // probe never reads.
-    if (docMode.startsWith("vectors")) {
-      for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "documents"))
-        write(read(t).withColumn("rep", lit(0)), t)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      write(read("events").withColumn("rep", lit(0)), "events")
-      scaleEmbeddings(clustered = docMode == "vectors")
       spark.stop()
       return
     }
@@ -315,7 +261,7 @@ object GenScale {
 
     scaleDocuments(fresh = docMode == "fresh")
 
-    scaleEmbeddings(clustered = false)
+    scaleEmbeddings()
 
     spark.stop()
   }

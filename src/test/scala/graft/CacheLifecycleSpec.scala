@@ -53,6 +53,32 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(n === pairs.count())
   }
 
+  /** A release-all hook that throws `e` on its first run only: hooks
+    * stay registered for the JVM lifetime, so one that kept throwing
+    * would reach every later spec's releaseAll.
+    */
+  private def throwOnce(e: Throwable): () => Unit = {
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    () => if (armed.getAndSet(false)) throw e
+  }
+
+  test("releaseAll: a hook's non-fatal failure does not stop the retained unpersist") {
+    val df = Caching.retain(Caching.releaseAfter(spark.range(1000).toDF("id")))
+    val rdd = Shim.checkpointedRdd(df).get
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    Caching.onReleaseAll(throwOnce(new IllegalStateException("injected hook failure")))
+    Caching.releaseAll()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id),
+      "a failing hook kept the retained frame's blocks alive")
+  }
+
+  test("releaseAll: a hook's fatal error (LinkageError) propagates") {
+    Caching.onReleaseAll(throwOnce(new LinkageError("injected fatal hook failure")))
+    val e = intercept[LinkageError](Caching.releaseAll())
+    assert(e.getMessage === "injected fatal hook failure")
+    Caching.releaseAll() // the hook is spent: this release runs to the end
+  }
+
   // The r9 leak finding: a stopped streaming query's memory-sink table
   // stayed reachable through its temp view for the JVM lifetime (and
   // the state store kept its version maps loaded). The boundary must

@@ -3,15 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Deterministic CLUSTERED embedding corpora for scale-regime specs —
-  * the GenScale `vectors` recipe (tools/GenScale.scala) at spec size:
+/** Deterministic CLUSTERED embedding corpora for scale-regime specs:
   * 256 hash-derived unit cluster directions, v = √0.75·ĉ + 0.5·r̂
   * normalized, so within-cluster cosine ≈ 0.75 and cross-cluster ≈ 0.
   * This is the structure real embedding corpora carry and the regime
   * the blocked/routed operators are deployed for; the committed A/B
-  * artifacts (EMBED_AB_*, ANNPROBE_*) measure the same construction at
-  * 200k–5M vectors. Pure hash of (vec_id, dim) — bit-stable across
-  * runs, no RNG state.
+  * artifacts (EMBED_AB_*, ANNPROBE_*) measured the same construction
+  * at 200k–5M vectors, built by GenScale's since-retired `vectors`
+  * mode. Pure hash of (vec_id, dim) — bit-stable across runs, no RNG
+  * state.
   */
 object ClusteredCorpus {
 

@@ -2,71 +2,36 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** GenScale's vectors-mode builders were rewritten in r15 from
-  * higher-order-function lambdas (always interpreted — ~10^10
-  * interpreted hash evals at factor 50000) to explicit 64-element
-  * arrays of codegen-able expressions. Replica vectors must stay
+/** GenScale's vector builder was rewritten in r15 from a
+  * higher-order-function lambda (always interpreted — ~10^10
+  * interpreted hash evals at factor 50000) to an explicit 64-element
+  * array of codegen-able expressions. Replica vectors must stay
   * BIT-identical across that rewrite, across scale factors, and
-  * therefore across rounds — every ANNPROBE_* artifact since r11
-  * measured corpora produced by the lambda form. This spec pins the
-  * two forms against each other element-for-element.
+  * therefore across rounds. This spec pins GenScale's own `rawVec`
+  * against the lambda form element-for-element.
   */
 class GenScaleVecSpec extends SparkSpec {
 
   test("explicit-array vector builder is bit-identical to the lambda form") {
-    val dims = 0 until 64
     // the lambda (pre-r15) form, verbatim from the old GenScale
     val rawLam = transform(sequence(lit(0), lit(63)), i =>
       (pmod(xxhash64(col("vec_id"), col("rep"), i), lit(2001L)).cast("double")
         - 1000.0) / 1000.0)
-    val cidC = pmod(xxhash64(col("vec_id"), col("rep"), lit("cluster")), lit(256L))
-    val centerLam = transform(sequence(lit(0), lit(63)), i =>
-      (pmod(xxhash64(cidC, i, lit("center")), lit(2001L)).cast("double")
-        - 1000.0) / 1000.0)
-    val cnLam = sqrt(aggregate(centerLam, lit(0.0), (a, x) => a + x * x))
-    val rnLam = sqrt(aggregate(rawLam, lit(0.0), (a, x) => a + x * x))
-    val combLam = zip_with(centerLam, rawLam,
-      (c, r) => lit(math.sqrt(0.75)) * c / cnLam + lit(0.5) * r / rnLam)
-    val nrmLam = sqrt(aggregate(combLam, lit(0.0), (a, x) => a + x * x))
-    val embLam = transform(combLam, x => (x / nrmLam).cast("float"))
-
-    // the explicit-array (r15) form, verbatim from the new GenScale
-    def sumSq(arr: String) =
-      dims.map(i => element_at(col(arr), i + 1) * element_at(col(arr), i + 1))
-        .reduce(_ + _)
-    val rawArr = array(dims.map(i =>
-      (pmod(xxhash64(col("vec_id"), col("rep"), lit(i)), lit(2001L)).cast("double")
-        - 1000.0) / 1000.0): _*)
-    val centerArr = array(dims.map(i =>
-      (pmod(xxhash64(col("_cid"), lit(i), lit("center")), lit(2001L)).cast("double")
-        - 1000.0) / 1000.0): _*)
-
     val src = spark.range(0, 500)
       .select(pmod(col("id"), lit(50L)).as("vec_id"),
         (col("id") * 37 + 1).as("rep"))
     val both = src
-      .withColumn("_cid", cidC)
-      .withColumn("_c", centerArr)
-      .withColumn("_r0", rawArr)
-      .withColumn("_cn", sqrt(sumSq("_c")))
-      .withColumn("_rn", sqrt(sumSq("_r0")))
-      .withColumn("_raw", array(dims.map(i =>
-        lit(math.sqrt(0.75)) * element_at(col("_c"), i + 1) / col("_cn") +
-          lit(0.5) * element_at(col("_r0"), i + 1) / col("_rn")): _*))
-      .withColumn("_nrm", sqrt(sumSq("_raw")))
-      .withColumn("emb_arr", array(dims.map(i =>
-        (element_at(col("_raw"), i + 1) / col("_nrm")).cast("float")): _*))
-      .withColumn("emb_lam", embLam)
-      .withColumn("raw_lam", rawLam)
-      .select("vec_id", "rep", "_r0", "raw_lam", "emb_arr", "emb_lam")
+      .select(col("vec_id"), col("rep"),
+        graft.tools.GenScale.rawVec.as("raw_arr"), rawLam.as("raw_lam"))
       .collect()
-    for (r <- both) {
-      // raw (uniform-mode) vectors: exact double equality
+    for (r <- both)
       assert(r.getSeq[Double](2) === r.getSeq[Double](3),
         s"raw mismatch at vec_id=${r.getLong(0)} rep=${r.getLong(1)}")
-      // full clustered+normalized pipeline: exact float equality
-      assert(r.getSeq[Float](4) === r.getSeq[Float](5),
-        s"embedding mismatch at vec_id=${r.getLong(0)} rep=${r.getLong(1)}")
-    }
+  }
+
+  test("a retired docmode fails with the usage message before any session starts") {
+    val e = intercept[IllegalArgumentException](
+      graft.tools.GenScale.main(Array("in", "out", "10", "vectors")))
+    assert(e.getMessage.contains("docmode must be replica|fresh|events|docs"))
   }
 }

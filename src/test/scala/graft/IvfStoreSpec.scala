@@ -166,46 +166,34 @@ class IvfStoreSpec extends SparkSpec {
     assert(again.assigned.count() === 2 * n)
   }
 
-  test("maintenance preserves the published layout; no staging dirs survive a publish") {
+  test("flat maintenance on one dir: add -> compact -> compactRetrain keeps results") {
     import org.apache.spark.sql.functions._
     def uvecs(lo: Long, hi: Long, salt: String) =
       spark.range(lo, hi).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(15)), i =>
           (pmod(xxhash64(col("id"), i, lit(salt)), lit(2001L))
             .cast("double") - 1000.0) / 1000.0).as("v"))
-    val dir = tempDir("ivf_layout").toString
+    val dir = tempDir("ivf_maint").toString
     val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
-    // publish PARTITIONED, then run both maintenance ops against the
-    // same dir: the first compaction of a cid-partitioned serving
-    // index must not silently republish it FLAT (losing the measured
-    // sparse-batch pruning win with no signal)
-    graft.sim.IvfStore.save(idx, dir, partitioned = true)
+    // the documented serving cycle, every step against the same dir
+    graft.sim.IvfStore.save(idx, dir)
     val served = graft.sim.IvfStore.load(spark, dir)
-    assert(served.prunable)
-    val compacted = graft.sim.IvfStore.compact(
-      graft.sim.IvfStore.add(served, uvecs(100000, 100050, "add")), dir)
-    assert(compacted.prunable, "compact dropped the partitioned layout")
-    assert(graft.sim.IvfStore.loadMeta(spark, dir).partitioned)
+    val added = graft.sim.IvfStore.add(served, uvecs(100000, 100050, "add"))
+    val compacted = graft.sim.IvfStore.compact(added, dir)
+    assert(compacted.assigned.count() === added.assigned.count())
+    assert(rows(graft.sim.Sim.searchIvf(compacted)) ===
+      rows(graft.sim.Sim.searchIvf(added)))
+    // the previous version is kept for in-flight readers, so the
+    // compacted frame still reads v1 after compactRetrain publishes v2
     val retrained = graft.sim.IvfStore.compactRetrain(compacted, dir)
-    assert(retrained.prunable, "compactRetrain dropped the partitioned layout")
-    assert(graft.sim.IvfStore.loadMeta(spark, dir).partitioned)
+    assert(graft.sim.IvfStore.currentVersion(spark, dir) === 2L)
+    assert(retrained.assigned.count() === compacted.assigned.count())
+    assert(rows(graft.sim.Sim.searchIvf(retrained)) ===
+      rows(graft.sim.Sim.searchIvf(graft.sim.IvfStore.retrain(compacted.assigned))))
     // staging dirs are renamed into v{n}, never left behind
     val stranded = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith(".stage"))
     assert(stranded.isEmpty, s"stranded staging dirs: ${stranded.mkString(",")}")
-  }
-
-  test("partitionedLayoutDue: partition exactly when a typical batch can't cover the index") {
-    import graft.sim.IvfStore.partitionedLayoutDue
-    // the measured sparse win point: 5 probes x nprobe 14 vs k=200
-    assert(partitionedLayoutDue(5, 14, 200))
-    // the measured full-coverage point: 50 probes x nprobe 14 >= k=200
-    assert(!partitionedLayoutDue(50, 14, 200))
-    // the st_ann harness geometry: 10 probes x nprobe 2 >= k=8 -> flat
-    assert(!partitionedLayoutDue(10, 2, 8))
-    // boundary: bound == k means every batch may cover -> flat
-    assert(!partitionedLayoutDue(100, 2, 200))
-    assert(partitionedLayoutDue(99, 2, 200))
   }
 
   test("indexHealth: a drifted batch trips retrain_due; a stationary batch does not") {
@@ -277,7 +265,7 @@ class IvfStoreSpec extends SparkSpec {
     // deleted v1, renamed its own set under the winner's marker, and
     // only then failed, leaving the winner serving the loser's index.
     val ex = intercept[IllegalStateException] {
-      graft.sim.IvfStore.save(idx, dir, partitioned = false, exchange = true,
+      graft.sim.IvfStore.save(idx, dir,
         onStaged = () => graft.sim.IvfStore.save(winner, dir))
     }
     assert(ex.getMessage.contains("claimed by a concurrent publisher"))
@@ -288,100 +276,6 @@ class IvfStoreSpec extends SparkSpec {
     val stranded = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith(".stage"))
     assert(stranded.isEmpty, s"stranded staging dirs: ${stranded.mkString(",")}")
-  }
-
-  test("partitioned publish: load is prunable; search matches flat and prunes the scan") {
-    val flatDir = tempDir("ivf_flat").toString
-    val partDir = tempDir("ivf_part").toString
-    val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
-    graft.sim.IvfStore.save(idx, flatDir)
-    graft.sim.IvfStore.save(idx, partDir, partitioned = true)
-    val flat = graft.sim.IvfStore.load(spark, flatDir)
-    val part = graft.sim.IvfStore.load(spark, partDir)
-    assert(!flat.prunable)
-    assert(part.prunable)
-    // meta baselines are layout-independent (same corpus, same cells)
-    val fm = graft.sim.IvfStore.loadMeta(spark, flatDir)
-    val pm = graft.sim.IvfStore.loadMeta(spark, partDir)
-    assert(pm.d2Base === fm.d2Base)
-    assert(pm.imbalance === fm.imbalance)
-    assert(pm.n === fm.n)
-    assert(pm.partitioned && !fm.partitioned)
-    // identical results either layout (the IN push is semantically a
-    // no-op on top of the cid equi-join) — the 10-probe batch is DENSE
-    // at k=8 (covers every cell), exercising the skip-when-full branch
-    assert(rows(graft.sim.Sim.searchIvf(part)) ===
-      rows(graft.sim.Sim.searchIvf(flat)))
-    // and in the SPARSE regime (1 probe -> nprobe=2 of 8 cells — where
-    // pruning pays; dense batches skip the filter by design) the plan
-    // really skips unprobed cells at the SCAN: the probed-cell IN set
-    // must appear in PartitionFilters (directory-level skip), not
-    // merely as a row predicate
-    import org.apache.spark.sql.functions.col
-    val oneProbe = part.assigned.filter(col("vec_id") < 1)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-    val sparse = graft.sim.Sim.searchIvfProbes(part, oneProbe)
-    assert(rows(sparse) ===
-      rows(graft.sim.Sim.searchIvfProbes(flat, oneProbe)))
-    val plan = sparse.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*cid#\d+L? IN""".r.findFirstIn(plan).isDefined,
-      s"probed-cell IN filter did not reach PartitionFilters:\n$plan")
-  }
-
-  test("map-side partitioned publish (exchange=false): same pruning, same results") {
-    import org.apache.spark.sql.functions.col
-    val exDir = tempDir("ivf_part_ex").toString
-    val mapDir = tempDir("ivf_part_map").toString
-    val idx = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
-    graft.sim.IvfStore.save(idx, exDir, partitioned = true)
-    graft.sim.IvfStore.save(idx, mapDir, partitioned = true, exchange = false)
-    val ex = graft.sim.IvfStore.load(spark, exDir)
-    val mp = graft.sim.IvfStore.load(spark, mapDir)
-    // identical meta and pruning semantics — only file granularity
-    // differs (files per cell = input partitions, not one)
-    assert(mp.prunable)
-    assert(graft.sim.IvfStore.loadMeta(spark, mapDir) ===
-      graft.sim.IvfStore.loadMeta(spark, exDir))
-    assert(rows(graft.sim.Sim.searchIvf(mp)) === rows(graft.sim.Sim.searchIvf(ex)))
-    val oneProbe = mp.assigned.filter(col("vec_id") < 1)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-    val sparse = graft.sim.Sim.searchIvfProbes(mp, oneProbe)
-    assert(rows(sparse) === rows(graft.sim.Sim.searchIvfProbes(ex, oneProbe)))
-    val plan = sparse.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*cid#\d+L? IN""".r.findFirstIn(plan).isDefined,
-      s"probed-cell IN filter did not reach PartitionFilters:\n$plan")
-  }
-
-  test("ADC serve from a partitioned artifact: cid-pruned refine is " +
-      "result-identical and the IN set reaches PartitionFilters") {
-    // the ADC-serving shape over a cid-partitioned artifact:
-    // the exact-re-rank fetch reads the published artifact filtered to
-    // the batch's routed cells (Sim.routedCids) — candidates are
-    // guaranteed to live in probed cells, so the filter must be a
-    // semantic no-op that becomes static partition pruning on the
-    // refine scan
-    import org.apache.spark.sql.functions.col
-    val dir = tempDir("ivf_adc_part").toString
-    val idx0 = graft.sim.Sim.ivfIndex(spark, sfDir, k = 8, iters = 3)
-    graft.sim.IvfStore.save(idx0, dir, partitioned = true)
-    val part = graft.sim.IvfStore.load(spark, dir)
-    val books = graft.sim.Sim.pqBooks(spark, sfDir)
-    val coded = graft.sim.Sim.encodePq(part.assigned, books)
-    val nprobe = 2
-    val oneProbe = part.assigned.filter(col("vec_id") < 1)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"))
-    val cids = graft.sim.Sim.routedCids(oneProbe, part.centroids, nprobe)
-    assert(cids.length === nprobe) // one probe routes to exactly nprobe cells
-    val prunedSrc = part.assigned.filter(col("cid").isin(cids.toIndexedSeq: _*))
-      .select(col("vec_id"), col("v"))
-    val flatSrc = part.assigned.select(col("vec_id"), col("v"))
-    val pruned = graft.sim.Sim.searchIvfAdcProbes(
-      prunedSrc, oneProbe, part.centroids, books, coded, nprobe)
-    assert(rows(pruned) === rows(graft.sim.Sim.searchIvfAdcProbes(
-      flatSrc, oneProbe, part.centroids, books, coded, nprobe)))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*cid#\d+L? IN""".r.findFirstIn(plan).isDefined,
-      s"routed-cell IN filter did not reach the refine scan's PartitionFilters:\n$plan")
   }
 
   test("IVF-ADC: save -> load -> search is identical to in-memory search") {
